@@ -249,15 +249,7 @@ object Bench {
     }.toMap
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.catalyst.GraftExtensions.install(spark)
+    val spark = Harness.session("graft-bench")
     // JVM/codegen warmup so the first measured query doesn't absorb ~4s of
     // one-time cost; deterministic name order keeps run-to-run comparisons
     // apples-to-apples (Map iteration order is arbitrary).

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for registry queries and flag
   * plan anti-patterns — missing parquet filter pushdown, missing broadcast
   * on dimension joins, nested-loop joins where an equi kernel was intended,
@@ -13,14 +11,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val wanted = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.catalyst.GraftExtensions.install(spark)
+    val spark = Harness.session("graft-plan-audit")
     val names =
       if (wanted.nonEmpty) SparkEntry.queries.keys.filter(wanted).toSeq.sorted
       else SparkEntry.queries.keys.toSeq.sorted

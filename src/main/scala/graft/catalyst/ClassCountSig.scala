@@ -24,10 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * continuation bytes (0b10xxxxxx) are skipped, so a multi-byte code
   * point counts exactly once (in bucket 7, since a-z are single-byte).
   * Counts saturate at 255 per bucket (the regexp form's least(·,255))
-  * and bucket i packs at bits 8i. NULL input → NULL, like the regexp
-  * chain (every regexp_count(NULL) is NULL and the sum propagates).
-  * OpsSpec pins native == regexp composition on random unicode strings
-  * including >255 saturation. */
+  * and bucket i packs at bits 8i. NULL input → NULL; the regexp chain
+  * differs there (least() skips the NULL counts, so it reads -1, every
+  * bucket saturated), a split OpsSpec pins. OpsSpec also pins native ==
+  * regexp composition on random unicode strings including >255
+  * saturation. */
 case class ClassCountSig(child: Expression) extends UnaryExpression {
 
   override def dataType: DataType = LongType

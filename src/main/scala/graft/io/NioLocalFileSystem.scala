@@ -26,10 +26,13 @@ class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, permission: FsPermission): Unit = {
     if (permission == null) return
+    val m = permission.toShort.toInt
+    // setuid/setgid/sticky have no PosixFilePermission: the stock chmod
+    // path keeps them, the nio path below would clear them
+    if ((m & 0xE00) != 0) return super.setPermission(p, permission)
     val file = pathToFile(p).toPath
     val perms = new java.util.HashSet[java.nio.file.attribute.PosixFilePermission]()
     import java.nio.file.attribute.PosixFilePermission._
-    val m = permission.toShort.toInt
     if ((m & 0x100) != 0) perms.add(OWNER_READ)
     if ((m & 0x080) != 0) perms.add(OWNER_WRITE)
     if ((m & 0x040) != 0) perms.add(OWNER_EXECUTE)

@@ -18,23 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Phase timer for [[jaccardNewVsCorpusPrefix]], active only under
-    * GRAFT_DEDUP_PROF=1 — prints per-phase wall seconds so a contended-box
-    * inflation (the bench drift signature this query showed two rounds
-    * running) can be attributed to a specific stage without an external
-    * profiler. In prof mode the phases are FORCED in sequence (count() on
-    * each persisted side, then on the candidate set), which the normal
-    * path never does — total prof-mode wall is indicative, not the
-    * benchmark number. */
-  private val prof = sys.env.get("GRAFT_DEDUP_PROF").contains("1")
-  private def timed[T](label: String)(f: => T): T =
-    if (!prof) f else {
-      val t0 = System.nanoTime()
-      val r = f
-      println(f"[dedup-prof] $label: ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
-
   /** Exact duplicates: one row per distinct text hash with its cardinality
     * and keeper (minimum) id. */
   def exactDuplicates(df: DataFrame, idCol: String, textCol: String)
@@ -196,10 +179,6 @@ object Dedup {
         .persist(StorageLevel.MEMORY_AND_DISK)
     val nd = prep(newDocs)
     val cd = prep(corpus)
-    if (prof) { // force each phase so its wall time is separable
-      timed("prep-new")(nd.count())
-      timed("prep-corpus")(cd.count())
-    }
     val sizeBand =
       col("a.n") >= col("b.n") * threshold &&
         col("b.n") >= col("a.n") * threshold
@@ -209,14 +188,13 @@ object Dedup {
           positionalFilter(threshold))
       .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
       .distinct()
-    if (prof) timed("candidates")(candidates.count())
     val da = nd.select(col("id").as("new_id"), col("ws").as("ws_a"))
     val db = cd.select(col("id").as("corpus_id"), col("ws").as("ws_b"))
     val pairs = candidates.join(da, "new_id").join(db, "corpus_id")
       .select(col("new_id"), col("corpus_id"),
         jaccardSorted(col("ws_a"), col("ws_b")).as("jac"))
       .filter(col("jac") >= threshold)
-    timed("verify+checkpoint")(graft.Util.finishAndRelease(pairs, nd, cd))
+    graft.Util.finishAndRelease(pairs, nd, cd)
   }
 
   /** Shared prep for the exact prefix-filter kernel: (id, ws, n, p) where
@@ -349,7 +327,6 @@ object Dedup {
         "threshold, so a cross-threshold probe silently misses pairs")
     val nd = prepPrefixDocs(newDocs, idCol, textCol, threshold)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    if (prof) timed("prep-new")(nd.count())
     val storedPrefixes = spark.read.parquet(s"$path/prefixes")
     require(storedPrefixes.columns.contains("pos"),
       s"exact prefix index at $path predates the positional-filter " +
@@ -364,7 +341,6 @@ object Dedup {
           positionalFilter(threshold))
       .select(col("a.id").as("new_id"), col("b.id").as("corpus_id"))
       .distinct()
-    if (prof) timed("candidates")(candidates.count())
     // Verify with the CORPUS side streaming: the id-pair candidate set and
     // the batch's (id, ws) table ride broadcasts (both are O(batch)-ish
     // and carry no corpus arrays), while the stored corpus docs scan
@@ -378,7 +354,7 @@ object Dedup {
       .select(col("new_id"), col("corpus_id"),
         jaccardSorted(col("ws_a"), col("ws_b")).as("jac"))
       .filter(col("jac") >= threshold)
-    timed("verify+checkpoint")(graft.Util.finishAndRelease(pairs, nd))
+    graft.Util.finishAndRelease(pairs, nd)
   }
 
   /** MinHash+LSH near-duplicate pairs: shingle → minhash → band → bucket
@@ -775,7 +751,14 @@ object Dedup {
 
   /** SimHash near-duplicate pairs with Hamming distance <= maxHamming
     * (<= 3 with 4 chunks): pigeonhole banding — two hashes within Hamming d
-    * share at least one of d+1 equal chunks — then exact popcount verify. */
+    * share at least one of d+1 equal chunks — then exact popcount verify.
+    *
+    * EAGER: the signature table is persisted internally and released
+    * before returning, so the pairs are computed at call time and come
+    * back `localCheckpoint`ed (`Util.finishAndRelease`). That truncates
+    * the lineage: the result's blocks are executor-local and cannot be
+    * recomputed after an executor loss. On a cluster, write the pairs
+    * to shared storage before relying on them across a long job. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucketSize: Int = 5000): DataFrame = {
@@ -1189,6 +1172,12 @@ object Dedup {
     * returned DataFrame and stay at
     * `reliableDir/cc-<uuid>/round-<k>` until the caller deletes them
     * (consume the result, then remove the run directory).
+    *
+    * Routing: `localEdgeThreshold` bounds RAW pair rows of `pairs`
+    * (duplicates and both directions counted as given), not distinct
+    * symmetrized edges. At or below it, integral or string ids are
+    * union-found on the driver; above it, or when a partition's buffer
+    * exceeds [[LocalEdgeBufferBytes]], the distributed loop runs.
     * Output: (id, component) for every id appearing in `pairs`. */
   def connectedComponents(pairs: DataFrame, idColA: String = "id_a",
                           idColB: String = "id_b",
@@ -1281,8 +1270,8 @@ object Dedup {
     type Buf = (scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.Row], Long)
     // nPairs counts RAW pair rows (pre-symmetrize, duplicates included):
-    // an upper bound on distinct edges, so the threshold routing is
-    // conservative — a graph under it in raw pairs is certainly
+    // an upper bound on distinct forward edges, so the threshold routing
+    // is conservative — a graph under it in raw pairs is certainly
     // union-findable
     val (nPairs, smallEdges) = fwd.rdd.treeAggregate(
       (0L, Option((new scala.collection.mutable.ArrayBuffer[

@@ -500,9 +500,10 @@ object SubstringDedup {
     *    the semi degrades to a sort-merge join that shuffles and sorts
     *    the whole index per probe. The inner form keeps the index a
     *    pure SCAN: the planner builds the batch-sized `wins`, and the
-    *    distinct touches batch-sized rows only. ScaleProbe14 measures
+    *    distinct touches batch-sized rows only. PERF.md (r14) records
     *    this arm exactly flat (971,572 shuffle rows) across a x1/x3/x10
-    *    index where the semi shape grows linearly.
+    *    index where the semi shape grows linearly; ScaleSpec's
+    *    window-index flat-shuffle test pins it.
     *
     * Both arms are pinned by ScaleSpec; results are hash-identical. */
   /** The size gate itself: `Some(force-broadcast hash column)` when the

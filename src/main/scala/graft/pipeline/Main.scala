@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry point for the varinfo pipeline — the reference's
   * `Rscript varinfo-update.R` analog (README.md:39). Runs phase 1 and, if
   * the human-edited checkpoint file exists, phase 2 (§3.4 protocol).
@@ -25,15 +23,10 @@ object Main {
       priorVarinfoFile = args(1),
       workDir = args(2),
       varinfoFolder = args(2))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-varinfo-update")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.catalyst.GraftExtensions.install(spark)
+    // SPARK_MASTER is a deployment setting (a cluster URL); the rest of
+    // the session policy is graft.Harness's
+    val spark = graft.Harness.session("graft-varinfo-update",
+      master = sys.env.get("SPARK_MASTER"))
     try VarinfoUpdate.run(spark, cfg)
     finally spark.stop()
   }

@@ -111,9 +111,8 @@ object IngestDedup {
     graft.Util.withMicroBatchPlanning(Seq(spark, batch0.sparkSession)) {
     BatchLedger.withGateLock(spark, indexPath) {
       // finish/roll back any interrupted compaction before probing
-      IngestProf.timed("repair")(
-        Seq(s"$indexPath/docs", s"$indexPath/buckets", outDir)
-          .foreach(p => graft.io.Parquet.repairBatchStore(spark, p)))
+      Seq(s"$indexPath/docs", s"$indexPath/buckets", outDir)
+        .foreach(p => graft.io.Parquet.repairBatchStore(spark, p))
       val fs = new Path(indexPath)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val docsDir = new Path(s"$indexPath/docs")
@@ -154,7 +153,7 @@ object IngestDedup {
       val sigBuckets = sigBuckets0
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        if (IngestProf.timed("isEmpty")(batch.isEmpty)) return
+        if (batch.isEmpty) return
         val accepted =
           if (!bootstrapped) {
             // first batch IS the corpus: self-dedup and index everything.
@@ -168,8 +167,7 @@ object IngestDedup {
                 "fresh directory")
             val pairs = Dedup.minhashLshPairsFromSigs(sigDocs, sigBuckets,
               threshold)
-            IngestProf.timed("bootstrap-cc")(
-              Dedup.dedupedCorpus(batch, idCol, pairs))
+            Dedup.dedupedCorpus(batch, idCol, pairs)
           } else {
             // replay guard: prune this batch's own half-committed
             // entries. Explicit schemas + layout guard (r14, the
@@ -201,9 +199,8 @@ object IngestDedup {
             val intraPairs = Dedup.minhashLshPairsFromSigs(sigDocs,
               sigBuckets.join(graft.Util.batchSide(a0Ids), Seq("id"),
                 "left_semi"), threshold)
-            try IngestProf.timed("intra-cc")(
-              Dedup.dedupedCorpus(a0, idCol, intraPairs)
-                .localCheckpoint()) // a0 unpersists below; sever the lineage
+            try Dedup.dedupedCorpus(a0, idCol, intraPairs)
+              .localCheckpoint() // a0 unpersists below; sever the lineage
             finally a0.unpersist()
           }
         val accP = accepted
@@ -213,7 +210,7 @@ object IngestDedup {
         // final state and nothing double-appends
         try {
           val accIds = accP.select(col(idCol).as("id"))
-          IngestProf.timed("writes")(graft.Util.runConcurrently(Seq(
+          graft.Util.runConcurrently(Seq(
             () => accP.write.mode("overwrite")
               .parquet(s"$outDir/batch=$batchId"),
             () => Dedup.putCorpusIndexBatchSigs(
@@ -221,8 +218,8 @@ object IngestDedup {
                 Seq("id"), "left_semi"),
               sigBuckets.join(graft.Util.batchSide(accIds),
                 Seq("id"), "left_semi"),
-              indexPath, batchId, shingleN, numHashes, bands))))
-          IngestProf.timed("stamp")(BatchLedger.stamp(spark, indexPath, batchId))
+              indexPath, batchId, shingleN, numHashes, bands)))
+          BatchLedger.stamp(spark, indexPath, batchId)
         } finally accP.unpersist()
       } finally {
         sigDocs.unpersist()

@@ -65,18 +65,6 @@ object SimilarityIngest {
                     threshold: Double = 0.8, windowK: Int = 8,
                     maxDupWindowRatio: Double = 0.5)
 
-  /** Phase timer, active only under GRAFT_INGEST_PROF=1 — prints
-    * per-phase wall seconds so per-batch overhead stays measurable
-    * without an external profiler. When a dev profiler has plugged a
-    * job counter into [[IngestProf.jobCount]] (IngestJobProfile does),
-    * each phase also prints its Spark JOB delta — the 10k-batches/day
-    * driver-overhead term — with listener-bus drains on both sides so
-    * async job-start events attribute to the right phase. Shared with
-    * the sibling gates since r15 ([[IngestProf.timed]]). */
-  private val prof = IngestProf.enabled
-  private def timed[T](label: String)(f: => T): T =
-    IngestProf.timed(label)(f)
-
   // The commit ledger is append-only marker files (see [[BatchLedger]]):
   // `_committed/batch-<id>`, created empty as the LAST write of a batch.
   // One empty file per committed nonempty batch.
@@ -141,8 +129,8 @@ object SimilarityIngest {
                      upToBatch: Long = Long.MaxValue): Unit = {
     // the five stores fold independently — BatchLedger.compactStores
     // runs them concurrently and prunes markers below the frontier
-    timed("compact")(BatchLedger.compactStores(spark, stateDir,
-      leafStores(stateDir), upToBatch))
+    BatchLedger.compactStores(spark, stateDir,
+      leafStores(stateDir), upToBatch)
   }
 
   /** Gate one micro-batch. Replaying the COMMITTED last batchId is an
@@ -157,7 +145,7 @@ object SimilarityIngest {
                  p: Params = Params()): Unit = {
     // -1 would collide with the empty-ledger sentinel and no-op silently
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val last = timed("ledger")(lastBatchId(spark, stateDir))
+    val last = lastBatchId(spark, stateDir)
     // batchId == last is the legitimate same-run replay (no-op below);
     // batchId < last means a FRESH CHECKPOINT was pointed at this state
     // dir — its restarted ids would silently no-op through the ledger,
@@ -183,8 +171,8 @@ object SimilarityIngest {
       // window (tmp segment present, originals half-deleted); finish or
       // roll back BEFORE probing, or the gates would read duplicated /
       // missing corpus entries. No-op (5 dir listings) in steady state.
-      timed("repair")(leafStores(stateDir).foreach(p =>
-        graft.io.Parquet.repairBatchStore(spark, p)))
+      leafStores(stateDir).foreach(p =>
+        graft.io.Parquet.repairBatchStore(spark, p))
       val minhashDir = s"$stateDir/minhash"
       val windowsDir = s"$stateDir/windows"
       // Bootstrap detection rides the STAMP, not index-directory existence:
@@ -243,7 +231,7 @@ object SimilarityIngest {
         df
       }
       try {
-        if (timed("isEmpty")(batch.isEmpty)) return
+        if (batch.isEmpty) return
         // ONE feature pass over the batch: MinHash signatures and window
         // hashes are computed once and pinned, then feed every consumer —
         // the two index probes, the intra-batch self-dedup, and the index
@@ -288,7 +276,7 @@ object SimilarityIngest {
               sigBuckets.join(graft.Util.batchSide(
                 b0.select(col(idCol).as("id"))), Seq("id"),
                 "left_semi"), p.threshold)
-            val a = timed("bootstrap-cc")(pin(Dedup.dedupedCorpus(b0, idCol, pairs)))
+            val a = pin(Dedup.dedupedCorpus(b0, idCol, pairs))
             val qCc = b0.join(graft.Util.batchSide(
                 a.select(col(idCol).as("__graft_keep"))),
                 b0(idCol) === col("__graft_keep"), "left_anti")
@@ -358,7 +346,6 @@ object SimilarityIngest {
               .groupBy(col("__graft_bad"))
               .agg(min(struct(col("__graft_prio"), col("reason"))).as("__m"))
               .select(col("__graft_bad"), col("__m.reason").as("reason")))
-            if (prof) timed("probe-mat")(bad.count())
             val qIndex = batch.join(graft.Util.batchSide(bad),
               batch(idCol) === col("__graft_bad"))
               .drop("__graft_bad")
@@ -379,7 +366,7 @@ object SimilarityIngest {
             val intraPairs = Dedup.minhashLshPairsFromSigs(sigDocs,
               sigBuckets.join(graft.Util.batchSide(a0Ids), Seq("id"),
                 "left_semi"), p.threshold)
-            val a = timed("intra-cc")(pin(Dedup.dedupedCorpus(a0, idCol, intraPairs)))
+            val a = pin(Dedup.dedupedCorpus(a0, idCol, intraPairs))
             val qIntra = a0.join(graft.Util.batchSide(
                 a.select(col(idCol).as("__graft_keep"))),
                 a0(idCol) === col("__graft_keep"), "left_anti")
@@ -401,7 +388,7 @@ object SimilarityIngest {
           Seq("id"), "left_semi")
         val accWins = wins.join(graft.Util.batchSide(
           acc.select(col(idCol).as("doc_id"))), Seq("doc_id"), "left_semi")
-        timed("writes")(graft.Util.runConcurrently(Seq(
+        graft.Util.runConcurrently(Seq(
           () => acc.write.mode("overwrite")
             .parquet(s"$stateDir/accepted/batch=$batchId"),
           () => quar.write.mode("overwrite")
@@ -409,8 +396,8 @@ object SimilarityIngest {
           () => Dedup.putCorpusIndexBatchSigs(accDocs, accBuckets,
             minhashDir, batchId, p.shingleN, p.numHashes, p.bands),
           () => SubstringDedup.putWindowIndexBatchFromWins(accWins,
-            windowsDir, batchId, p.windowK))))
-        timed("stamp")(writeStamp(spark, stateDir, batchId))
+            windowsDir, batchId, p.windowK)))
+        writeStamp(spark, stateDir, batchId)
       } finally {
         pinned.foreach(_.unpersist())
         batch.unpersist()

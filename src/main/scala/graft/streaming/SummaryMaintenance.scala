@@ -666,7 +666,8 @@ object SummaryMaintenance {
     // the COMMITTER reads the stored summary with the schema it itself
     // writes (= the delta's: this very merge produced every stored
     // file), skipping parquet footer inference — measured at one driver
-    // JOB per commit (IngestJobProfile r16), i.e. half the steady-state
+    // JOB per commit (PERF.md r16; ScaleSpec pins the commit job
+    // budget), i.e. half the steady-state
     // commit's job count at 10k batches/day. External readers keep the
     // inferring readSummary: they don't know the key types.
     val stored = readableData(fs, root)
@@ -883,9 +884,9 @@ object SummaryMaintenance {
               curMapping.get(b).map(d =>
                 new Path(new Path(root, d), s"bucket=$b").toString))
             // explicit schema on the stored-leaf read: skips footer
-            // inference, one driver job per commit saved
-            // (IngestJobProfile r16), the same discipline as the
-            // gates' stored-index reads
+            // inference, one driver job per commit saved (PERF.md r16,
+            // ScaleSpec's commit job budget), the same discipline as
+            // the gates' stored-index reads
             //
             // ONE exchange, keyed by the PARTITION column (r17, guide
             // §2.4 "two operations keyed the same way share one

@@ -1011,4 +1011,107 @@ class CatalystSpec extends SparkSpec {
       spark.conf.unset(LevJoinKernelRule.EnabledKey)
     }
   }
+
+  test("native kernels equal their built-in compositions inside " +
+      "whole-stage codegen with codegen fallback off") {
+    import graft.catalyst.{ClassCountSig, CosineSimilarity, DotProduct,
+      SortedIntersectCount, SqDistance}
+    import graft.ops.SimilarityJoin
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.graft.GraftSql
+    def native2(k: (Expression, Expression) => Expression)(
+        a: Column, b: Column): Column =
+      GraftSql.column(k(GraftSql.expression(a), GraftSql.expression(b)))
+    def hofDot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
+    def hofSqDist(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _)
+    def hofCosine(a: Column, b: Column): Column = {
+      val d = sqrt(hofDot(a, a)) * sqrt(hofDot(b, b))
+      when(d === 0, lit(0.0)).otherwise(hofDot(a, b) / d)
+    }
+    // Rows come from spark.range, not a local relation, so the kernels
+    // run on executors inside the generated stage rather than being
+    // folded on the driver. Only codegen'd built-ins build the inputs
+    // (no lambdas, which would keep the stage out of whole-stage
+    // codegen). The vectors cover ragged lengths (every 7th row),
+    // all-zero vectors (every 11th) and NULL elements (every 13th).
+    val id = col("id")
+    def terms(seed: Int, n: Int): Seq[Column] =
+      Seq.tabulate(n)(i => (id * seed + i * i) % 40)
+    def vec(seed: Int): Column = {
+      val full = array(Seq.tabulate(8)(i =>
+        ((id * seed + i * 17) % 23 - 11).cast("double") / 3.0): _*)
+      when(id % 13 === 0, array(lit(1.0), lit(null).cast("double")))
+        .when(id % 11 === 0, array_repeat(lit(0.0), 8))
+        .when(id % 7 === 0 && seed == 3, slice(full, 1, 5))
+        .otherwise(full)
+    }
+    // no NULL text: the regexp reference reads NULL as all-saturated
+    // (least() skips nulls) where the kernel returns NULL, a known split
+    // OpsSpec pins on its own
+    val text = concat(expr("repeat('ab', cast(id % 300 as int))"),
+      lit("Zé 9 "), expr("substring('the quick brown fox jumps over " +
+        "the lazy dog', cast(id % 20 as int), 15)"))
+    val data = spark.range(400).select(id, vec(3).as("va"),
+      vec(5).as("vb"),
+      sort_array(array_distinct(array(terms(7, 21): _*))).as("la"),
+      sort_array(array_distinct(array(terms(3, 21): _*))).as("lb"),
+      sort_array(array_distinct(
+        array(terms(7, 21).map(_.cast("string")): _*))).as("sa"),
+      sort_array(array_distinct(
+        array(terms(3, 21).map(_.cast("string")): _*))).as("sb"),
+      text.as("t"))
+    val cases = Seq[(String, Class[_], Column, Column)](
+      ("cosine_sim", classOf[CosineSimilarity],
+        native2(CosineSimilarity)(col("va"), col("vb")),
+        hofCosine(col("va"), col("vb"))),
+      ("dot_product", classOf[DotProduct],
+        native2(DotProduct)(col("va"), col("vb")),
+        hofDot(col("va"), col("vb"))),
+      ("sq_dist", classOf[SqDistance],
+        native2(SqDistance)(col("va"), col("vb")),
+        hofSqDist(col("va"), col("vb"))),
+      ("sorted_intersect_count(long)", classOf[SortedIntersectCount],
+        native2(SortedIntersectCount)(col("la"), col("lb")),
+        size(array_intersect(col("la"), col("lb")))),
+      ("sorted_intersect_count(string)", classOf[SortedIntersectCount],
+        native2(SortedIntersectCount)(col("sa"), col("sb")),
+        size(array_intersect(col("sa"), col("sb")))),
+      ("class_count_sig", classOf[ClassCountSig],
+        GraftSql.column(ClassCountSig(GraftSql.expression(col("t")))),
+        SimilarityJoin.classCountSignatureRegexp(col("t"))))
+    // bit equality for doubles (0.0 vs -0.0 and NaN payloads count)
+    def same(x: Any, y: Any): Boolean = (x, y) match {
+      case (a: Double, b: Double) =>
+        java.lang.Double.doubleToRawLongBits(a) ==
+          java.lang.Double.doubleToRawLongBits(b)
+      case _ => x == y
+    }
+    val FallbackKey = "spark.sql.codegen.fallback"
+    spark.conf.set(FallbackKey, "false")
+    try cases.foreach { case (name, kernel, nat, builtin) =>
+      // the built-in lambdas cannot join a generated stage, so each side
+      // gets its own projection, matched up by row id
+      val df = data.select(id, nat.as("v"))
+      val got = df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+      val want = data.select(id, builtin.as("v")).collect()
+        .map(r => r.getLong(0) -> r.get(1)).toMap
+      val inCodegen = df.queryExecution.executedPlan.collect {
+        case w: WholeStageCodegenExec => w.child.collect {
+          case p: ProjectExec => p.projectList
+        }.flatten
+      }.flatten
+      assert(inCodegen.exists(_.exists(kernel.isInstance)),
+        s"$name must evaluate inside whole-stage codegen:\n" +
+          df.queryExecution.executedPlan)
+      assert(got.size === 400 && want.keySet === got.keySet)
+      got.foreach { case (i, v) => assert(same(v, want(i)),
+        s"$name row $i: native $v != built-in ${want(i)}") }
+      assert(got.values.toSeq.distinct.length > 3,
+        s"$name: the fixture must exercise more than a few values")
+    } finally spark.conf.unset(FallbackKey)
+  }
 }

@@ -211,8 +211,8 @@ class ScaleSpec extends SparkSpec {
 
   test("IngestDedup steady-state micro-batch stays within its job " +
       "budget (r15, VERDICT #1)") {
-    // the third gate's job economy, measured at 10 jobs/batch by
-    // IngestJobProfile (PERF.md r15) after r14's sibling refactor
+    // the third gate's job economy, measured at 10 jobs/batch
+    // (PERF.md r15) after r14's sibling refactor
     // (shuffle-hash batch joins, explicit-schema layout-guarded index
     // reads). This pin is the behavioral form of the batchSide plan
     // assert: a broadcast regression on any batch-vs-batch join, or a
@@ -771,7 +771,7 @@ class ScaleSpec extends SparkSpec {
   test("bucketed summary commit shuffle rows stay FLAT as total key " +
       "cardinality grows; the plain mode must degrade (r16, VERDICT #4)") {
     // the O(delta + touched buckets) claim as a standing drift pin, the
-    // ScaleProbe14 shape: a FIXED delta committed against summaries of
+    // window-index pin's shape: a FIXED delta committed against summaries of
     // x1/x3/x10 total cardinality must shuffle the SAME rows — growth
     // lives entirely in buckets the delta never touches, so the merge
     // reads exactly the touched leaves' fixed content. The plain pointer
@@ -836,8 +836,8 @@ class ScaleSpec extends SparkSpec {
   test("summary commit modes stay within their job budgets: swap 1, " +
       "pointer 1, bucketed 2 jobs/commit (r16, VERDICT #5)") {
     // maintained views run foreachBatch in the same 10k-batches/day
-    // regime as the three ingest gates (pinned 12/8/10); measured by
-    // IngestJobProfile at sf0.01 (PERF.md r16): swap 1, pointer 1,
+    // regime as the three ingest gates (pinned 12/8/10); measured
+    // at sf0.01 (PERF.md r16): swap 1, pointer 1,
     // bucketed 2 jobs per steady-state commit, after the committer's
     // stored-summary reads went explicit-schema (the first profile
     // read 2/2/3 — the extra job everywhere was parquet footer

@@ -2949,4 +2949,33 @@ class StreamingSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no accepted corpus"))
   }
+
+  test("nio local filesystem keeps setuid, setgid and sticky bits") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.permission.FsPermission
+    val fs = new graft.io.NioRawLocalFileSystem
+    fs.initialize(java.net.URI.create("file:///"),
+      new org.apache.hadoop.conf.Configuration())
+    val f = java.nio.file.Files.createTempFile("graft_nio_mode", ".bin")
+    try {
+      def modeAfter(perm: FsPermission): Int = {
+        fs.setPermission(new Path(f.toUri), perm)
+        java.nio.file.Files.getAttribute(f, "unix:mode")
+          .asInstanceOf[Int] & 0xFFF
+      }
+      def octal(m: String): Short = Integer.parseInt(m, 8).toShort
+      // FsPermission.fromShort keeps only the sticky bit of the three, so
+      // setuid and setgid ride a toShort override, the way extended
+      // permission subclasses carry bits the base class does not model
+      Seq("4755", "2755").foreach { m =>
+        val extended = new FsPermission(octal("755")) {
+          override def toShort: Short = octal(m)
+        }
+        assert(modeAfter(extended) === octal(m).toInt, m)
+      }
+      assert(modeAfter(new FsPermission(octal("1755"))) === octal("1755"))
+      // the plain bits still take the nio path and clear the extras
+      assert(modeAfter(new FsPermission(octal("640"))) === octal("640"))
+    } finally java.nio.file.Files.deleteIfExists(f)
+  }
 }
