@@ -318,6 +318,15 @@ object Util {
         n
     }
 
+  /** The session's `spark.sql.shuffle.partitions`, for an explicit
+    * (never-coalesced) repartition count; a non-numeric value falls back
+    * to the core count. */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.conf.get("spark.sql.shuffle.partitions").trim match {
+      case s if s.nonEmpty && s.forall(_.isDigit) => s.toInt
+      case _ => spark.sparkContext.defaultParallelism
+    }
+
   /** Spread one micro-batch to the gate's configured parallelism (r18,
     * guide §2). A foreachBatch frame often arrives as ONE partition (a
     * single file, a single-row-group parquet scan, one Kafka partition's

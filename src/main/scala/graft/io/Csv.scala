@@ -1,7 +1,7 @@
 package graft.io
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** S1/S4 — CSV scan & sink options in one place
   * (reference varinfo-update.R:54,150,152,232,239,247,253 readr
@@ -120,10 +120,15 @@ object Csv {
 
   /** S4 — single-file sink with header (the human-edit checkpoint contract
     * requires ONE file at an exact path, like `write_csv`). Writes through a
-    * temp dir then renames the single part file. */
-  def writeSingle(df: DataFrame, path: String): Unit = {
+    * temp dir then renames the single part file. A non-empty `orderBy`
+    * sorts the rows inside the one write task (no extra job), so the
+    * file's row order does not depend on the input's partitioning. */
+  def writeSingle(df: DataFrame, path: String,
+                  orderBy: Seq[Column] = Nil): Unit = {
     val tmp = path + ".__graft_tmp"
-    df.coalesce(1).write.mode("overwrite")
+    val one = df.coalesce(1)
+    (if (orderBy.isEmpty) one else one.sortWithinPartitions(orderBy: _*))
+      .write.mode("overwrite")
       .option("header", "true")
       // RFC-4180 output, symmetric with `read`: quotes are escaped by
       // doubling (Spark's write default is backslash-escape, which our own

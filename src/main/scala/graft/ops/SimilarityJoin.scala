@@ -9,16 +9,22 @@ import org.apache.spark.sql.functions._
   * `max_dist` config at :15, emitted `distance_col`).
   *
   * Physical strategy, in order of scale:
-  *  1. `leftJoin` — BroadcastNestedLoopJoin with two always-sound prefilters:
-  *     a length band (levenshtein >= |len(a)-len(b)|) and Spark's
-  *     early-exit 3-arg `levenshtein(l, r, threshold)`, which abandons a
-  *     pair as soon as the running distance exceeds the bound. Right for a
-  *     small (broadcastable) right side — the reference's case (~260 rows).
-  *  2. `blockedInnerJoin` — replicates each right row once per candidate
-  *     length in [len-d, len+d] and equi-joins on exact string length. This
-  *     turns the O(|L|·|R|) nested loop into a shuffle hash join keyed on an
-  *     int, so both sides scale out; the true distance is verified after the
-  *     equi match. Replication factor is only (2d+1).
+  *  1. `leftJoin` — broadcast hash join on a length band: the right side
+  *     is replicated once per admissible partner length in [len-d, len+d]
+  *     (levenshtein >= |len(a)-len(b)|) and broadcast, so each left row
+  *     probes only its own band instead of looping over every right row.
+  *     Each band candidate then meets the remaining conjuncts in cost
+  *     order: the character-class signature bound ([[sigDistance]] <= 2d),
+  *     then Spark's early-exit 3-arg `levenshtein(l, r, threshold)`, which
+  *     abandons a pair as soon as the running distance exceeds the bound.
+  *     Length and signature are computed once per ROW on each side. LEFT
+  *     semantics come from the join itself (no separate padding pass).
+  *     The streamed left side's partitioning sets the join's parallelism
+  *     (one task per left partition). Right for a small (broadcastable)
+  *     right side — the reference's case (~260 rows).
+  *  2. `blockedInnerJoin` — the same length band and prefilters as an
+  *     INNER shuffle join keyed on an int, so neither side has to fit in
+  *     memory and both sides scale out. Replication factor is only (2d+1).
   */
 object SimilarityJoin {
 
@@ -85,36 +91,22 @@ object SimilarityJoin {
 
   /** Theta left join: one output row per qualifying (left, right) pair plus
     * the distance; left rows with no qualifying partner survive with nulls
-    * (distance null too), mirroring `stringdist_left_join`. */
+    * (distance null too), mirroring `stringdist_left_join`. The right side
+    * is broadcast (2d+1 replicas per row) and the join runs one task per
+    * partition of `left`, so a caller with a single-partition left side
+    * should repartition it first. Its working columns mark the plan as a
+    * kernel plan, so [[graft.catalyst.LevJoinKernelRule]] leaves it alone:
+    * for two large sides call [[autoLeftJoin]] instead. */
   def leftJoin(left: DataFrame, right: DataFrame,
                leftKey: String, rightKey: String, maxDist: Int,
                distCol: String = "string_distance"): DataFrame = {
     // same contract as blockedLeftJoin, enforced equally: a shared name
     // would come through as ambiguous duplicate columns that break the
     // caller later, and the two kernels must stay interchangeable
-    locally {
-      val shared = left.columns.toSet.intersect(right.columns.toSet)
-      require(shared.isEmpty,
-        s"leftJoin needs disjoint column names; rename ${shared.mkString(", ")} first")
-      require(!left.columns.contains(distCol) &&
-        !right.columns.contains(distCol),
-        s"input already carries a column named '$distCol' — withColumn " +
-          "would silently REPLACE it; pass a different distCol")
-    }
-    val l = left.alias("sj_l")
-    val r = right.alias("sj_r")
-    val lk = col(s"sj_l.${q(leftKey)}")
-    val rk = col(s"sj_r.${q(rightKey)}")
-    // the DP runs in the join condition (every candidate pair — the
-    // dominant cost) and once more in the projection for SURVIVING pairs
-    // only. Unlike blockedInnerJoin, the survivor recompute cannot be
-    // folded into the condition here: LEFT semantics need the predicate
-    // at join time to decide null-padding, and Spark cannot project a
-    // join-condition intermediate. Survivors are a vanishing fraction of
-    // candidates under any selective theta, so this is second-order.
-    l.join(r, condition(lk, rk, maxDist), "left")
-      .withColumn(distCol,
-        when(rk.isNotNull, boundedDistance(lk, rk, maxDist)))
+    val shared = left.columns.toSet.intersect(right.columns.toSet)
+    require(shared.isEmpty,
+      s"leftJoin needs disjoint column names; rename ${shared.mkString(", ")} first")
+    bandJoin(left, right, leftKey, rightKey, maxDist, distCol, "left")
   }
 
   /** Run a similarity kernel over the DISTINCT key values of both sides,
@@ -162,6 +154,19 @@ object SimilarityJoin {
       return viaDistinctKeys(left, right, leftKey, rightKey, distCol,
         (dl, dr) => blockedInnerJoin(dl, dr, leftKey, rightKey, maxDist,
           distCol))
+    bandJoin(left, right, leftKey, rightKey, maxDist, distCol, "inner")
+  }
+
+  /** The length-banded join behind [[leftJoin]] ("left": right side
+    * broadcast, unmatched lefts padded by the join itself) and
+    * [[blockedInnerJoin]] ("inner": a shuffle join). The left side carries
+    * its length as the band key; the right side is exploded over its 2d+1
+    * admissible partner lengths, so each qualifying pair matches exactly
+    * once (the band value equals the left string's length). A null key
+    * has a null length and matches nothing. */
+  private def bandJoin(left: DataFrame, right: DataFrame,
+                       leftKey: String, rightKey: String, maxDist: Int,
+                       distCol: String, joinType: String): DataFrame = {
     val band = "__graft_len_band"
     val sigL = "__graft_sig_l"
     val sigR = "__graft_sig_r"
@@ -175,32 +180,33 @@ object SimilarityJoin {
       !right.columns.contains(distCol),
       s"input already carries a column named '$distCol' — withColumn " +
         "would silently REPLACE it; pass a different distCol")
+    // length and signature once per ROW (the signature BEFORE the 2d+1
+    // band explode — once per row, not once per replica)
     val l = left.withColumn(band, length(qc(leftKey)))
       .withColumn(sigL, classCountSignature(qc(leftKey)))
       .alias("sj_l")
-    // signature computed BEFORE the 2d+1 band explode — once per row,
-    // not once per replica
-    val r = right
+    val r0 = right
       .withColumn(sigR, classCountSignature(qc(rightKey)))
       .withColumn(band,
         explode(sequence(length(qc(rightKey)) - maxDist,
                          length(qc(rightKey)) + maxDist)))
-      .alias("sj_r")
+    val r = (if (joinType == "left") broadcast(r0) else r0).alias("sj_r")
     val lk = col(s"sj_l.${q(leftKey)}")
     val rk = col(s"sj_r.${q(rightKey)}")
-    // the verify is an EXPLICIT join condition with the conjuncts in
-    // cost order (r17, guide §1.2): the ~50-op signature bound runs
-    // first and provably eliminates pairs with lev > maxDist, so the
-    // O(d·len) bounded DP only runs on signature survivors. (The old
-    // shape joined on the band alone and filtered after; Catalyst
-    // pushed that filter into the join condition anyway, but with the
-    // DP as the FIRST conjunct.) The projection recomputes the DP for
-    // TRUE survivors only — a vanishing fraction of candidates.
+    // the verify conjuncts in cost order (r17): the ~50-op
+    // signature bound runs first and provably eliminates pairs with
+    // lev > maxDist, so the O(d·len) bounded DP only runs on signature
+    // survivors. The projection recomputes the DP for TRUE survivors
+    // only: a LEFT join needs the predicate at join time to decide
+    // null-padding, and Spark cannot project a join-condition
+    // intermediate. Survivors are a vanishing fraction of candidates.
+    val dist = boundedDistance(lk, rk, maxDist)
     l.join(r, col(s"sj_l.$band") === col(s"sj_r.$band") &&
         sigDistance(col(s"sj_l.$sigL"), col(s"sj_r.$sigR")) <=
           lit(2L * maxDist) &&
-        boundedDistance(lk, rk, maxDist) >= 0)
-      .withColumn(distCol, boundedDistance(lk, rk, maxDist))
+        dist >= 0, joinType)
+      .withColumn(distCol,
+        if (joinType == "left") when(rk.isNotNull, dist) else dist)
       .drop(band, sigL, sigR)
   }
 
@@ -438,13 +444,9 @@ object SimilarityJoin {
     // re-execution). REPARTITION_BY_NUM is never coalesced, and the
     // co-partitioning requirement holds the rExp side at the same count,
     // so the DP runs at the session's configured shuffle parallelism.
-    val verifyParts = left.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").trim match {
-        case s if s.forall(_.isDigit) && s.nonEmpty => s.toInt
-        case _ => left.sparkSession.sparkContext.defaultParallelism
-      }
     val verified = lExp.join(candidates, "__ga")
-      .repartition(verifyParts, col("__gb"))
+      .repartition(graft.Util.shufflePartitions(left.sparkSession),
+        col("__gb"))
       .join(rExp, "__gb")
       .withColumn(distCol, boundedDistance(lk, rk, d))
       // signature bound FIRST (sound — see [[classCountSignature]]), so

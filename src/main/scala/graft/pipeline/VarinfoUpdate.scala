@@ -37,8 +37,17 @@ object VarinfoUpdate {
     // (J1) and best-match-per-row selection (J2). The right side's original
     // position is carried as a deterministic tiebreaker — R keeps the
     // first-encountered tie, which is order-dependent; we pin it.
-    val ciWithId = RowId.withRowId1(columnInfo, "__graft_ci_id")
+    val ciId = "__graft_ci_id"
+    val ciWithId = RowId.withRowId1(columnInfo, ciId)
+    // The prior arrives as ONE partition (a multiLine CSV scan, then
+    // RowId's zipWithIndex), and the broadcast similarity join runs one
+    // task per partition of its streamed side. Hash-partitioning on row_id
+    // spreads it over the session's shuffle partitions, and it is the
+    // clustered distribution the top-1 selection needs, so that step adds
+    // no exchange of its own.
     val prior = RowId.withRowId1(priorVarinfo, "row_id")
+      .repartition(graft.Util.shufflePartitions(priorVarinfo.sparkSession),
+        col("row_id"))
       .withColumn(cfg.joinColumnText,
         coalesce(qcol(cfg.joinColumnText), lit("")))
     // Kernel selection by right-side size: a broadcastable column_info
@@ -55,12 +64,26 @@ object VarinfoUpdate {
         SimilarityJoin.blockedLeftJoin(
           prior, ciWithId, cfg.joinColumnText, d.questionTextColName,
           cfg.maxStringDistance)
+    // the fuzzy match's variable name rides through the rescue join in a
+    // hidden column, so the fuzzy and rescue stats come from one
+    // aggregate over the one materialized result
+    val fuzzyVar = "__graft_fuzzy_var"
     val fuzzyJoined = BestMatch.topOnePerKey(
         pairs, Seq(col("row_id")),
         Seq(col("string_distance").asc_nulls_last,
-            col("__graft_ci_id").asc_nulls_last))
-      .drop("__graft_ci_id")
-      .cache() // reused by stats, rescue join, and both sinks
+            col(ciId).asc_nulls_last))
+      .drop(ciId)
+      .withColumn(fuzzyVar, qcol(d.qualtricsColName))
+
+    // Rescue join by variable name with column-wise coalesce (J3) — values
+    // from the fuzzy join win over the variable-name join.
+    val joined = CoalesceJoin.coalesceLeftJoin(
+      fuzzyJoined, columnInfo, cfg.joinColumnVar, d.qualtricsColName)
+
+    // materialize once (the codebase-wide finishAndRelease convention):
+    // the stats, both sinks and the anti join below all read the
+    // checkpoint instead of re-running the join
+    val checkpointed = graft.Util.finishAndRelease(joined)
 
     // totalVars reuses the kernel-selection count (r13: it IS
     // columnInfo.count() — ciWithId adds only a row id — and the two
@@ -75,44 +98,34 @@ object VarinfoUpdate {
     // unmatched counts subtract DISTINCT matched variables, not matched
     // prior rows: a cumulative codebook has many rows per variable, and
     // row counts would drive "N unmatched (out of M)" negative
-    // (the reference's row arithmetic CAN — varinfo-update.R:113,130)
-    val statsRow = fuzzyJoined.agg(
+    // (the reference's row arithmetic CAN — varinfo-update.R:113,130).
+    // exact/fuzzy/vars_matched read the pre-rescue name, totalMatched the
+    // rescued one.
+    val statsRow = checkpointed.agg(
       count(when(col("string_distance") === 0 &&
-        qcol(d.qualtricsColName).isNotNull, 1)).as("exact"),
+        col(fuzzyVar).isNotNull, 1)).as("exact"),
       count(when(col("string_distance") > 0 &&
-        qcol(d.qualtricsColName).isNotNull, 1)).as("fuzzy"),
-      count_distinct(qcol(d.qualtricsColName)).as("vars_matched")
+        col(fuzzyVar).isNotNull, 1)).as("fuzzy"),
+      count_distinct(col(fuzzyVar)).as("vars_matched"),
+      count_distinct(qcol(d.qualtricsColName)).as("total_matched")
     ).collect()(0)
-    val (exact, fuzzy) =
-      (statsRow.getAs[Long]("exact"), statsRow.getAs[Long]("fuzzy"))
-    val unmatchedText = totalVars - statsRow.getAs[Long]("vars_matched")
-
-    // Rescue join by variable name with column-wise coalesce (J3) — values
-    // from the fuzzy join win over the variable-name join.
-    val joined = CoalesceJoin.coalesceLeftJoin(
-      fuzzyJoined, columnInfo, cfg.joinColumnVar, d.qualtricsColName)
-
-    // release the stage cache before returning (the codebase-wide
-    // finishAndRelease convention): the checkpoint severs the outputs'
-    // lineage from the cached plan, so a service calling this per batch
-    // accumulates no persisted state. Checkpoint FIRST, then aggregate
-    // the stats from the checkpointed frame (r13): aggregating the lazy
-    // `joined` plan before materializing it executed the whole rescue
-    // join twice per call.
-    val joinedFinal = graft.Util.finishAndRelease(joined, fuzzyJoined)
-
-    val totalMatched = joinedFinal
-      .agg(count_distinct(qcol(d.qualtricsColName))).collect()(0)
-      .getLong(0)
-    val stillUnmatched = totalVars - totalMatched
-    val stats = MatchStats(totalVars, exact, fuzzy, unmatchedText,
-      totalMatched, stillUnmatched)
+    val totalMatched = statsRow.getAs[Long]("total_matched")
+    val stats = MatchStats(totalVars,
+      exact = statsRow.getAs[Long]("exact"),
+      fuzzy = statsRow.getAs[Long]("fuzzy"),
+      unmatchedText = totalVars - statsRow.getAs[Long]("vars_matched"),
+      totalMatched = totalMatched,
+      stillUnmatched = totalVars - totalMatched)
+    val joinedFinal = checkpointed.drop(fuzzyVar)
 
     // Unmatched new variables (J4) — null-safe keys like dplyr's
     // na_matches = "na", so the sentinel row (NULL name) is excluded when
-    // any prior row stayed unmatched.
+    // any prior row stayed unmatched. Returned in survey-column order,
+    // like anti_join(column_info, ...): one task sorts the (small) result
+    // by column position, whatever the partitioning of the join.
     val unmatched =
-      AntiJoin.antiJoin(columnInfo, joinedFinal, d.qualtricsColName)
+      AntiJoin.antiJoin(ciWithId, joinedFinal, d.qualtricsColName)
+        .coalesce(1).sortWithinPartitions(col(ciId)).drop(ciId)
 
     (joinedFinal, unmatched, stats)
   }
@@ -124,7 +137,9 @@ object VarinfoUpdate {
       spark, cfg.responseFile, cfg.surveyYear)
     val prior = Csv.readAsStrings(spark, cfg.priorVarinfoFile)
     val (joined, unmatched, stats) = joinVarinfo(prior, columnInfo, cfg)
-    Csv.writeSingle(joined, cfg.needsManualUpdateFile)
+    // prior-codebook order, like arrange(row_id, ...) then distinct
+    Csv.writeSingle(joined, cfg.needsManualUpdateFile,
+      orderBy = Seq(col("row_id")))
     Csv.writeSingle(unmatched, cfg.unmatchedVarsFile)
     println(s"[graft] Fuzzy text join (max distance = ${cfg.maxStringDistance}): " +
       s"${stats.exact} exact, ${stats.fuzzy} fuzzy, " +

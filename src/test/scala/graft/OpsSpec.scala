@@ -209,6 +209,50 @@ class OpsSpec extends SparkSpec {
     assert(auto.contains((None, None)))
   }
 
+  test("leftJoin equals a naive cross join filtered by levenshtein <= d") {
+    // null keys, multi-byte code points (a surrogate pair too), duplicate
+    // left values, and runs longer than 255 of one character class, which
+    // saturate the prefilter's signature fields
+    val rnd = new scala.util.Random(29)
+    val alphabet = Seq("a", "b", "e", "q", "z", " ", "Q", "7", "é", "中", "😀")
+    def randStr() = Seq.fill(rnd.nextInt(11))(
+      alphabet(rnd.nextInt(alphabet.size))).mkString
+    val runs = Seq("a" * 300, "a" * 298 + "bb", "a" * 256, "b" * 257,
+      "e" * 260 + "a" * 3, "e" * 258 + "aq", "中" * 270, "中" * 268 + "😀")
+    val ls: Seq[Option[String]] =
+      (Seq.fill(80)(randStr()) ++ runs ++ Seq("ab", "ab")).map(Option(_)) ++
+        Seq(None, None)
+    val rs: Seq[Option[String]] =
+      (Seq.fill(80)(randStr()) ++ runs.map(_.drop(1))).map(Option(_)) :+ None
+    val l = ls.zipWithIndex.map { case (s, i) => (i, s) }.toDF("lid", "a")
+    val r = rs.toDF("b")
+    for (d <- Seq(0, 1, 3)) {
+      val got = SimilarityJoin.leftJoin(l, r, "a", "b", d)
+        .select("lid", "b", "string_distance").collect()
+        .map(x => (x.getInt(0), Option(x.getString(1)),
+          Option(x.get(2)).map(_.asInstanceOf[Int]))).toSeq.sorted
+      val pairs = l.crossJoin(r)
+        .withColumn("dist", levenshtein(col("a"), col("b")))
+        .filter(col("dist") <= d)
+        .select("lid", "b", "dist").collect()
+        .map(x => (x.getInt(0), Option(x.getString(1)), Option(x.getInt(2))))
+      val matched = pairs.map(_._1).toSet
+      val padded = ls.indices.filterNot(matched).map((_, None, None))
+      assert(got === (pairs.toSeq ++ padded).sorted, s"d = $d")
+      assert(pairs.nonEmpty && padded.nonEmpty)
+    }
+    // like blockedInnerJoin, inputs may not carry the working columns
+    for (c <- Seq("__graft_len_band", "__graft_sig_l", "__graft_sig_r")) {
+      val e1 = intercept[IllegalArgumentException] {
+        SimilarityJoin.leftJoin(l.withColumn(c, lit(1)), r, "a", "b", 2)
+      }
+      val e2 = intercept[IllegalArgumentException] {
+        SimilarityJoin.leftJoin(l, r.withColumn(c, lit(1)), "a", "b", 2)
+      }
+      assert(e1.getMessage.contains(c) && e2.getMessage.contains(c))
+    }
+  }
+
   test("autoLeftJoin aliases overlapping names internally and restores them") {
     val rnd = new scala.util.Random(11)
     def randStr(n: Int) =
