@@ -130,14 +130,6 @@ object Util {
     * contract. */
   def batchSide(df: DataFrame): DataFrame = df.hint("shuffle_hash")
 
-  /** A stored index's on-disk schema: the frame schema it was written
-    * from plus the `batch=` partition column (shared by the gates'
-    * explicit-schema reads — one definition, so a store-schema change
-    * cannot drift between gates). */
-  def withBatchColumn(s: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
-    s.add("batch", org.apache.spark.sql.types.LongType)
-
   /** Guard for the gates' explicit-schema index reads (r14 review): an
     * explicit schema turns "this store has no `batch` partition layout"
     * from a loud AnalysisException into silently-NULL `batch` values —
@@ -247,19 +239,35 @@ object Util {
     }
   }
 
-  /** Planning profile for O(batch)-sized micro-batch gate work (r13,
-    * VERDICT #3): ADAPTIVE EXECUTION OFF. AQE submits one driver JOB per
-    * query stage — measured 53 jobs per similarity-gate micro-batch and
-    * 47 per embedding-gate batch at sf0.1, versus 24 and 13 with AQE
-    * off (wall also improved ~10%). At 10k micro-batches/day that
-    * per-job driver overhead (DAG build, scheduling, listener traffic)
-    * is the scale term local[32] wall time barely shows. Inside a gate
-    * the batch is small by contract, partition counts are known, and
-    * skew is bounded by the hot-bucket caps, so AQE's runtime re-planning
-    * buys nothing — results are identical either way. Opt out (keep AQE
-    * on) by setting `spark.graft.ingest.adaptive=true` for gates that
-    * legitimately feed huge batches (bulk backfills through the batch
-    * path).
+  /** Shuffle partitions of micro-batch gate work; see
+    * [[withMicroBatchPlanning]]. */
+  val MicroBatchPartitions: Int = 8
+
+  /** Planning profile for O(batch)-sized micro-batch gate work: ADAPTIVE
+    * EXECUTION OFF and [[MicroBatchPartitions]] shuffle partitions.
+    *
+    * AQE submits one driver JOB per query stage — measured 53 jobs per
+    * similarity-gate micro-batch and 47 per embedding-gate batch at
+    * sf0.1, versus 24 and 13 with AQE off (wall also improved ~10%). At
+    * 10k micro-batches/day that per-job driver overhead (DAG build,
+    * scheduling, listener traffic) is the scale term local[32] wall time
+    * barely shows. Inside a gate the batch is small by contract,
+    * partition counts are known, and skew is bounded by the hot-bucket
+    * caps, so AQE's runtime re-planning buys nothing — results are
+    * identical either way.
+    *
+    * With AQE off, every micro-batch shuffle would otherwise run at the
+    * SESSION's partition count — sized for interactive corpus queries,
+    * not for O(batch) commit work — and each stage pays its fixed
+    * per-task cost (scheduling, codegen/task setup, one parquet writer +
+    * committer rename per task on write stages) on mostly-empty
+    * partitions: measured 32-48-task stages moving tens of KB, ~60-70% of
+    * summary commit wall at sf0.1. A batch is micro-batch-sized BY
+    * CONTRACT (the gates' O(batch) probes, the summary's
+    * O(delta+touched) merge), so a small fixed parallelism is right at
+    * every deployment scale. Results are unaffected: every gate/summary
+    * aggregate is partition-count-invariant and hash-gated by the
+    * driver's oracle.
     *
     * Takes EVERY session the batch's plans can be rooted at: under real
     * Structured Streaming the foreachBatch DataFrame belongs to the
@@ -267,56 +275,16 @@ object Util {
     * sparkSessionForStream), not the outer session the gate also reads
     * stored indexes through — toggling only the outer session would
     * silently leave the batch-rooted plans (the bulk of the gate) on
-    * AQE (r13 review). Callers pass the outer session AND
-    * `batch.sparkSession`; duplicates are collapsed.
-    *
-    * r17 (task economy, guide §2.2/§6 small-task analog): the same scope
-    * also pins `spark.sql.shuffle.partitions` to
-    * `spark.graft.ingest.shufflePartitions` (default 8). With AQE off,
-    * every micro-batch shuffle otherwise runs at the SESSION's partition
-    * count — sized for interactive corpus queries, not for O(batch)
-    * commit work — and each stage pays its fixed per-task cost
-    * (scheduling, codegen/task setup, one parquet writer + committer
-    * rename per task on write stages) on mostly-empty partitions:
-    * measured 32-48-task stages moving tens of KB, ~60-70% of summary
-    * commit wall at sf0.1. A batch is micro-batch-sized BY CONTRACT
-    * (the gates' O(batch) probes, the summary's O(delta+touched) merge),
-    * so a small fixed parallelism is right at every deployment scale;
-    * bulk backfills through the batch path opt out with
-    * `spark.graft.ingest.adaptive=true` exactly as for AQE (they keep
-    * the session's AQE + partition sizing). Results are unaffected:
-    * every gate/summary aggregate is partition-count-invariant and
-    * hash-gated by the driver's oracle. */
+    * AQE. Callers pass the outer session AND `batch.sparkSession`;
+    * duplicates are collapsed. */
   def withMicroBatchPlanning[T](
-      sessions: Seq[org.apache.spark.sql.SparkSession])(f: => T): T = {
-    val distinct = sessions.distinct.filterNot(s =>
-      s.conf.getOption("spark.graft.ingest.adaptive")
-        .exists(_.trim.equalsIgnoreCase("true")))
-    distinct.foldLeft(() => f) { (g, s) =>
-      val parts = microBatchPartitions(s).toString
+      sessions: Seq[org.apache.spark.sql.SparkSession])(f: => T): T =
+    sessions.distinct.foldLeft(() => f) { (g, s) =>
       () => withSessionConf(s, "spark.sql.adaptive.enabled", "false") {
-        withSessionConf(s, "spark.sql.shuffle.partitions", parts)(g())
+        withSessionConf(s, "spark.sql.shuffle.partitions",
+          MicroBatchPartitions.toString)(g())
       }
     }()
-  }
-
-  /** The micro-batch parallelism knob (`spark.graft.ingest.shufflePartitions`,
-    * default 8) as a validated positive Int — shared by
-    * [[withMicroBatchPlanning]]'s shuffle pin and [[spreadBatch]]. Validated
-    * HERE, loudly (r17 ADVICE): the old all-digits filter let "0" (or an
-    * over-Int value) through, failing deep inside Spark with an error that
-    * never names the misconfigured key. */
-  def microBatchPartitions(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.ingest.shufflePartitions")
-      .map(_.trim).filter(_.nonEmpty) match {
-      case None => 8
-      case Some(v) =>
-        val n = v.toIntOption.getOrElse(-1)
-        require(n >= 1,
-          s"spark.graft.ingest.shufflePartitions must be a positive " +
-            s"integer, got '$v'")
-        n
-    }
 
   /** The session's `spark.sql.shuffle.partitions`, for an explicit
     * (never-coalesced) repartition count; a non-numeric value falls back
@@ -327,25 +295,22 @@ object Util {
       case _ => spark.sparkContext.defaultParallelism
     }
 
-  /** Spread one micro-batch to the gate's configured parallelism (r18,
-    * guide §2). A foreachBatch frame often arrives as ONE partition (a
-    * single file, a single-row-group parquet scan, one Kafka partition's
-    * slice) — and the gates' dominant per-batch cost is the narrow
+  /** Spread one micro-batch to [[MicroBatchPartitions]]. A foreachBatch
+    * frame often arrives as ONE partition (a single file, a
+    * single-row-group parquet scan, one Kafka partition's slice) — and the gates' dominant per-batch cost is the narrow
     * compute ABOVE their first shuffle (tokenize + shingle + numHashes
     * hashes per doc, window hashing, cell hashing), which then runs on
     * one core no matter how many the session has (measured: the whole
     * signature pass of a 1667-doc batch single-task, most of the gates'
     * probe-mat phase). One batch-sized hash shuffle buys the micro-batch
-    * parallelism back; the count is the SAME conf that sizes the gates'
+    * parallelism back; the count is the one that sizes the gates'
     * shuffles, so the O(batch) task-economy contract is unchanged, and
     * results are partition-count-invariant (every gate aggregate/join is,
     * pinned by the gates' oracles). A batch already AT the target count
     * skips the shuffle. */
-  def spreadBatch(df: DataFrame, key: String): DataFrame = {
-    val parts = microBatchPartitions(df.sparkSession)
-    if (df.rdd.getNumPartitions == parts) df
-    else df.repartition(parts, qcol(key))
-  }
+  def spreadBatch(df: DataFrame, key: String): DataFrame =
+    if (df.rdd.getNumPartitions == MicroBatchPartitions) df
+    else df.repartition(MicroBatchPartitions, qcol(key))
 
   /** Run independent Spark actions CONCURRENTLY and wait for all of them
     * — the exactly-once gates' commit/compaction shape: N mutually

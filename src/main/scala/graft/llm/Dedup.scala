@@ -585,7 +585,9 @@ object Dedup {
     * extra column is inert. The params stamp is written on first use and
     * validated after — bootstrap and append are the same call. An index
     * must use EITHER this layout or the flat write/append one, not both
-    * (mixed root files + partition dirs break parquet discovery). */
+    * (mixed root files + partition dirs break parquet discovery). Fold a
+    * gate's committed batches with its locked compaction
+    * ([[graft.streaming.BatchLedger.compactStores]]). */
   def putCorpusIndexBatch(batch: DataFrame, idCol: String, textCol: String,
                           path: String, batchId: Long, shingleN: Int = 3,
                           numHashes: Int = 32, bands: Int = 8): Unit = {
@@ -629,7 +631,9 @@ object Dedup {
 
   /** Seed a per-batch corpus index with an EXISTING corpus: the seed lands
     * as the `batch=-1` base segment ([[putCorpusIndexBatch]] with id -1 —
-    * the same slot compaction folds into), so an exactly-once gate whose
+    * the same slot a gate's locked compaction folds committed batches
+    * into, [[graft.streaming.BatchLedger.compactStores]]), so an
+    * exactly-once gate whose
     * live batch ids are non-negative can replay any batch without ever
     * overwriting or self-matching the seed. Use this (not
     * [[writeCorpusIndex]], whose flat layout cannot be mixed with batch
@@ -639,23 +643,6 @@ object Dedup {
                       bands: Int = 8): Unit =
     putCorpusIndexBatch(corpus, idCol, textCol, path, -1L,
       shingleN, numHashes, bands)
-
-  /** Fold committed batches (ids 0..upToBatch) of a [[putCorpusIndexBatch]]
-    * layout into one compacted `batch=-1` base segment per table, so
-    * incremental probes stay O(few files) after years of appends. The
-    * caller guarantees every folded batch is committed by its own ledger;
-    * batches above `upToBatch` keep their subdirs for replay overwrite.
-    * The `_params` stamp is untouched. Streaming-gate state dirs should
-    * use [[graft.streaming.SimilarityIngest.compactIndexes]] /
-    * [[graft.streaming.IngestDedup.compact]], which derive the frontier
-    * from the commit ledger AND hold the compaction lock — this raw
-    * helper takes NO lock, so calling it directly against a path a live
-    * stream is gating races the gate's probes unprotected. */
-  def compactCorpusIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, upToBatch: Long): Unit = {
-    graft.io.Parquet.compactBatchStore(spark, s"$path/docs", upToBatch)
-    graft.io.Parquet.compactBatchStore(spark, s"$path/buckets", upToBatch)
-  }
 
   /** Append a batch's shingle sets + band buckets to a stored corpus index
     * (see `writeCorpusIndex`) — the per-accepted-batch half of the
@@ -1055,12 +1042,6 @@ object Dedup {
     fs.exists(root) && fs.listStatus(root)
       .exists(s => s.isDirectory && s.getPath.getName.startsWith("batch="))
   }
-
-  /** Fold committed batches of a [[putSemanticIndexBatch]] layout into the
-    * `batch=-1` base segment (see [[compactCorpusIndex]]). */
-  def compactSemanticIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, upToBatch: Long): Unit =
-    graft.io.Parquet.compactBatchStore(spark, s"$path/cells", upToBatch)
 
   /** Probe a stored semantic index with a new batch: only the batch is
     * cell-hashed; the corpus side is ONE parquet scan whose join key is

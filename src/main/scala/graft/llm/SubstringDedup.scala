@@ -252,7 +252,9 @@ object SubstringDedup {
     * with OVERWRITE semantics, so a replay overwrites its own earlier
     * append. Probes select `whash` by name; the discovered `batch`
     * partition column is inert. An index must use EITHER this layout or
-    * the flat write/append one, not both. */
+    * the flat write/append one, not both. Fold a gate's committed batches
+    * with its locked compaction
+    * ([[graft.streaming.BatchLedger.compactStores]]). */
   def putWindowIndexBatch(df: DataFrame, idCol: String, textCol: String,
                           k: Int, path: String, batchId: Long): Unit =
     putWindowIndexBatchFromWins(hashedWindows(df, idCol, textCol, k),
@@ -276,18 +278,6 @@ object SubstringDedup {
     wins.select(col("whash")).distinct()
       .write.mode("overwrite").parquet(s"$path/batch=$batchId")
   }
-
-  /** Fold committed batches (ids 0..upToBatch) of a [[putWindowIndexBatch]]
-    * layout into one compacted `batch=-1` base segment — probes are
-    * semi-joins on `whash`, so the folded layout is probe-identical while
-    * cutting a long ingest run's file count from one-per-batch back to
-    * ~data/128MB. Caller guarantees the folded batches are committed.
-    * Takes NO lock: against a live stream's state dir use
-    * [[graft.streaming.SimilarityIngest.compactIndexes]], which wraps
-    * this store's fold in the compaction lock. */
-  def compactWindowIndex(spark: org.apache.spark.sql.SparkSession,
-                         path: String, upToBatch: Long): Unit =
-    graft.io.Parquet.compactBatchStore(spark, path, upToBatch)
 
   /** Gate-side metric for incremental ingest: per-doc window counts and
     * how many of those windows already exist in the stored index — the

@@ -1,16 +1,59 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.storage.StorageLevel
 
-/** Append-only commit ledger shared by the exactly-once micro-batch gates
-  * ([[SimilarityIngest]], [[IngestDedup]]): one empty marker file
-  * `_committed/batch-<id>` per committed nonempty batch, created as the
-  * LAST write of the batch. Existence is the commit record — nothing is
-  * ever rewritten, so there is no crash window in which the ledger itself
-  * can be lost or truncated (an overwritten single-file stamp has exactly
-  * that window, and a corrupted stamp would wedge or mis-route every
-  * subsequent replay). */
+/** The exactly-once micro-batch protocol of the ingest gates
+  * ([[SimilarityIngest]], [[EmbeddingIngest]], [[IngestDedup]]): one
+  * commit loop ([[gateBatch]]) into which each gate plugs only its
+  * verdict body, one locked compaction path ([[compactStores]]), one
+  * committed-read path ([[committedRead]]) and one stream builder
+  * ([[stream]]).
+  *
+  * '''Ledger.''' One empty marker file `_committed/batch-<id>` per
+  * committed nonempty batch, created as the LAST write of the batch.
+  * Existence is the commit record — nothing is ever rewritten, so there
+  * is no crash window in which the ledger itself can be lost or
+  * truncated (an overwritten single-file stamp has exactly that window,
+  * and a corrupted stamp would wedge or mis-route every subsequent
+  * replay).
+  *
+  * '''Writes.''' Every store a gate writes is batch-keyed: the batch's
+  * rows land at `<store>/batch=<id>` with OVERWRITE semantics. The
+  * stores are mutually independent, so they are written concurrently,
+  * and the marker is the only barrier. Hence:
+  *   - a replay of the committed id is a no-op;
+  *   - a replay of a half-committed batch (crashed after some writes,
+  *     before its marker) reads the prior corpus with its own
+  *     half-written rows partition-pruned out (`batch =!= id`), so it
+  *     re-derives the same verdicts and overwrites the same directories:
+  *     nothing double-appends, nothing self-matches;
+  *   - an id below the ledger fails loudly. That only happens when a
+  *     fresh checkpoint is pointed at existing state, where silent
+  *     no-ops would drop batches. Ids must be non-negative and monotone;
+  *     batch backfills through the same path feed increasing ids against
+  *     a fresh state dir;
+  *   - an empty batch writes nothing and stamps nothing.
+  *
+  * '''Base segment.''' `batch=-1` holds a pre-seeded corpus or the fold
+  * of committed batches ([[compactStores]]). Live ids are non-negative,
+  * so no replay ever overwrites or self-matches it. A pre-seed routes
+  * batch 0 through the gate's probe branch instead of its self-dedup
+  * bootstrap, and must cover every index store the gate probes, or none.
+  * That all-or-none check runs only before the first commit: a crash
+  * inside the concurrent fold legitimately leaves some stores folded and
+  * others not, and compaction never creates a base before the first
+  * commit.
+  *
+  * '''Isolation.''' Readers see committed batches only
+  * ([[committedRead]]). A gate's batch and a compaction fold exclude each
+  * other through heartbeated lock markers ([[withGateLock]],
+  * [[withCompactionLock]]), and a fold that crashed mid-swap is repaired
+  * before the next batch probes ([[graft.io.Parquet.repairBatchStore]]). */
 private[graft] object BatchLedger {
   private val Dir = "_committed"
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -23,7 +66,7 @@ private[graft] object BatchLedger {
     * checks the OTHER side's marker and backs out loudly if it is
     * fresh — so BOTH interleavings fail fast: a compaction starting
     * while a batch is mid-probe, and a batch starting while a fold is
-    * mid-swap. (Before r10 only the second direction was enforced.)
+    * mid-swap.
     *
     * Liveness without leases: the holder heartbeats its marker's mtime
     * every [[LockHeartbeatMs]]; a marker not touched for [[LockStaleMs]]
@@ -415,15 +458,13 @@ private[graft] object BatchLedger {
   }
 
   /** Run a compaction fold holding `_compact.lock`; fails loudly if a
-    * gate's micro-batch is in flight. Used by [[compactStores]] and by
-    * [[IngestDedup.compact]] (whose stores don't share one state dir). */
+    * gate's micro-batch is in flight. */
   def withCompactionLock[T](spark: SparkSession,
                             stateDir: String)(f: => T): T =
     withLock(spark, stateDir, CompactLockName, GateLockName, graceMs = 0L)(f)
 
   /** Run one micro-batch's gate work holding `_gate.lock`; fails loudly
-    * if a compaction fold is in flight (the pre-r10 entry check only
-    * caught the batch-starts-second interleaving). The grace window lets
+    * if a compaction fold is in flight. The grace window lets
     * the gate WIN a simultaneous start — a compaction that just backed
     * out on seeing the gate's marker releases within moments. */
   def withGateLock[T](spark: SparkSession, stateDir: String)(f: => T): T =
@@ -473,8 +514,7 @@ private[graft] object BatchLedger {
     * replay overwrites them) are pruned via the ledger, so readers never
     * observe an uncommitted verdict; the compacted base is `batch=-1`,
     * always <= any committed frontier. Throws IllegalStateException
-    * before the first nonempty batch commits — shared by both
-    * multi-store gates so the contract cannot drift between them. */
+    * before the first nonempty batch commits. */
   def committedRead(spark: SparkSession, stateDir: String,
                     path: String): org.apache.spark.sql.DataFrame = {
     val frontier = last(spark, stateDir)
@@ -508,11 +548,20 @@ private[graft] object BatchLedger {
   }
 
   /** Fold all committed batches up to `upToBatch` (clamped to the ledger
-    * frontier) into each store's `batch=-1` base segment — concurrently,
-    * the stores are independent directories — then prune ledger markers
-    * below the retained maximum. The shared body of the gates'
-    * compactIndexes; see [[SimilarityIngest.compactIndexes]] for the
-    * replay-semantics argument. */
+    * frontier) into each store's `batch=-1` base segment, then prune
+    * ledger markers below the retained maximum. Without this, a year of
+    * micro-batches leaves every O(batch) probe scanning 10k+ tiny
+    * per-batch files; after it, each store is ~data/128MB files again.
+    * The stores are independent directories, so they fold concurrently.
+    *
+    * Replay semantics are unchanged: the base sits below every live id,
+    * a half-committed batch ABOVE the frontier keeps its own subdirs for
+    * its replay to overwrite, and only markers strictly below the
+    * retained maximum are removed, so [[last]] (and with it no-op replay
+    * detection) does not move. Holds `_compact.lock` across the fold: a
+    * concurrent batch or second compaction fails loudly instead of
+    * racing the gate's probes, and a crash mid-fold is repaired by the
+    * next batch or compaction (the dead holder's lock goes stale). */
   def compactStores(spark: SparkSession, stateDir: String,
                     stores: Seq[String], upToBatch: Long): Unit = {
     val frontier = last(spark, stateDir)
@@ -525,4 +574,110 @@ private[graft] object BatchLedger {
       prune(spark, stateDir, frontier)
     }
   }
+
+  /** What [[gateBatch]] hands a gate's verdict body besides the batch. */
+  final class GateBatch private[BatchLedger] (spark: SparkSession,
+                                              val fs: FileSystem,
+                                              id: Long,
+                                              val bootstrapped: Boolean) {
+    private val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
+
+    /** Persist `df` (unless it already is) and unpersist it when the
+      * batch ends, committed or not: a transient failure mid-commit must
+      * not leak persists into the retry. */
+    def pin(df: DataFrame): DataFrame = {
+      if (df.storageLevel == StorageLevel.NONE)
+        df.persist(StorageLevel.MEMORY_AND_DISK)
+      pinned += df
+      df
+    }
+
+    /** The prior corpus of one batch-keyed store: everything in it except
+      * this batch's own half-written rows (the replay prune). `schema` is
+      * the frame schema the store was written from; reading with it
+      * (plus the `batch` column) instead of inferring from footers saves
+      * one Spark job per store per batch. The layout guard keeps the
+      * explicit schema honest: a flat or foreign store would read `batch`
+      * as NULL and the prune would silently empty the corpus. */
+    def prior(path: String, schema: StructType): DataFrame = {
+      graft.Util.requireBatchLayout(fs, path)
+      spark.read.schema(schema.add("batch", LongType)).parquet(path)
+        .filter(col("batch") =!= id)
+    }
+
+    private[BatchLedger] def release(): Unit = pinned.foreach(_.unpersist())
+  }
+
+  /** One micro-batch of a gate, under the protocol in this object's
+    * scaladoc. `stores` are every batch-keyed directory the gate writes
+    * (crash-repaired before the body runs); `seedStores` are the index
+    * stores a pre-seed must cover. The body gets the batch spread by
+    * `idCol` and pinned, and returns the batch's writes, one per store;
+    * they run concurrently, and the marker lands after all of them. */
+  private[streaming] def gateBatch(spark: SparkSession, stateDir: String,
+      batch0: DataFrame, batchId: Long, idCol: String, stores: Seq[String],
+      seedStores: Seq[String])(
+      body: (GateBatch, DataFrame) => Seq[() => Unit]): Unit = {
+    // -1 would collide with the empty-ledger sentinel and no-op silently
+    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
+    val committed = last(spark, stateDir)
+    require(batchId >= committed,
+      s"batch id $batchId regressed below the committed ledger " +
+        s"($committed) at $stateDir: state was built by a different " +
+        "checkpoint lineage. Use fresh state or restore the original " +
+        "checkpoint.")
+    if (batchId == committed) return
+    // BOTH sessions: under Structured Streaming batch0 is rooted at the
+    // stream's cloned session, the stored-index reads at `spark`
+    graft.Util.withMicroBatchPlanning(Seq(spark, batch0.sparkSession)) {
+      withGateLock(spark, stateDir) {
+        stores.foreach(graft.io.Parquet.repairBatchStore(spark, _))
+        val fs = new Path(stateDir)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val g = new GateBatch(spark, fs, batchId,
+          bootstrapped = committed >= 0L || seeded(fs, stateDir, seedStores))
+        try {
+          // spread BEFORE the feature passes: a one-partition
+          // foreachBatch frame otherwise runs the whole per-doc compute
+          // single-task
+          val batch = g.pin(graft.Util.spreadBatch(batch0, idCol))
+          if (!batch.isEmpty) {
+            graft.Util.runConcurrently(body(g, batch))
+            stamp(spark, stateDir, batchId)
+          }
+        } finally g.release()
+      }
+    }
+  }
+
+  /** Whether a pre-seeded `batch=-1` base exists; refuses a seed that
+    * covers only some of `seedStores`. Meaningful only before the first
+    * commit (see the base-segment note above). */
+  private def seeded(fs: FileSystem, stateDir: String,
+                     seedStores: Seq[String]): Boolean = {
+    val (have, missing) =
+      seedStores.partition(s => fs.exists(new Path(s, "batch=-1")))
+    require(have.isEmpty || missing.isEmpty,
+      s"partially seeded state at $stateDir (a half-written seed): a " +
+        s"batch=-1 base exists in ${have.mkString(", ")} but not in " +
+        s"${missing.mkString(", ")}. Seed every index store at id -1, or " +
+        "none — the gate probes them all.")
+    have.nonEmpty
+  }
+
+  /** The Structured Streaming query every micro-batch body in this
+    * package runs under: a parquet directory source, `apply` once per
+    * micro-batch with its id. The source schema is `schema`, else the
+    * existing files' under `srcDir`. The WAL checkpoint plus the body's
+    * own batch-keyed commit give exactly-once end to end; the caller
+    * `.start()`s the query. */
+  def stream(spark: SparkSession, srcDir: String, checkpointDir: String,
+             schema: Option[StructType] = None)(
+      apply: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    spark.readStream
+      .schema(schema.getOrElse(spark.read.parquet(srcDir).schema))
+      .parquet(srcDir)
+      .writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch(apply)
 }

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Streaming semantic-dedup ingest gate for EMBEDDING streams — the
-  * embedding twin of [[SimilarityIngest]], behind the same exactly-once
-  * machinery ([[BatchLedger]] append-only markers + batch-keyed
-  * overwrite writes):
+  * embedding twin of [[SimilarityIngest]], on the same exactly-once loop
+  * ([[BatchLedger]]: batch-keyed overwrite writes, append-only ledger
+  * markers, `batch=-1` base segment):
   *
   *   1. the batch probes the stored sign-cell index
   *      ([[graft.llm.Dedup.putSemanticIndexBatch]]); vectors within
@@ -21,15 +21,6 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   *   3. accepted vectors append to `accepted/` and their (id, cell, v)
   *      rows to the semantic index, so every later batch probes them at
   *      O(batch) — the corpus is never recomputed.
-  *
-  * Crash/replay semantics are [[SimilarityIngest]]'s: every write lands
-  * at `<store>/batch=<id>` with overwrite, the `_committed/batch-<id>`
-  * marker is the LAST write, a replay of a stamped batch no-ops, and a
-  * replay of a half-committed batch partition-prunes its own index rows
-  * out (`batch =!= id`) so it re-derives identical verdicts and
-  * overwrites the same directories. [[compactIndexes]] folds committed
-  * batches into the `batch=-1` base (live ids are non-negative, so no
-  * replay can touch the base).
   *
   * Scale shape: the probe is one cell-keyed equi-join against a stored
   * parquet index — per-batch cost O(batch × cell density), corpus-size
@@ -49,167 +40,96 @@ object EmbeddingIngest {
   /** Accepted vectors so far (committed-batch isolated; throws before
     * the first nonempty commit — no schema to return). */
   def accepted(spark: SparkSession, stateDir: String): DataFrame =
-    committedRead(spark, stateDir, s"$stateDir/accepted")
+    BatchLedger.committedRead(spark, stateDir, s"$stateDir/accepted")
 
   /** Quarantined vectors with their `reason` (committed-batch isolated,
     * pre-commit behavior as [[accepted]]). */
   def quarantined(spark: SparkSession, stateDir: String): DataFrame =
-    committedRead(spark, stateDir, s"$stateDir/quarantine")
-
-  private def committedRead(spark: SparkSession, stateDir: String,
-                            path: String): DataFrame =
-    BatchLedger.committedRead(spark, stateDir, path)
+    BatchLedger.committedRead(spark, stateDir, s"$stateDir/quarantine")
 
   private def leafStores(stateDir: String): Seq[String] = Seq(
     s"$stateDir/accepted", s"$stateDir/quarantine",
     s"$stateDir/semantic/cells")
 
   /** Fold committed batches into the `batch=-1` base segment per store
-    * and prune ledger markers below the frontier (see
-    * [[SimilarityIngest.compactIndexes]] — same contract). */
+    * and prune the ledger ([[BatchLedger.compactStores]]). */
   def compactIndexes(spark: SparkSession, stateDir: String,
-                     upToBatch: Long = Long.MaxValue): Unit = {
+                     upToBatch: Long = Long.MaxValue): Unit =
     BatchLedger.compactStores(spark, stateDir, leafStores(stateDir),
       upToBatch)
-  }
 
-  /** Gate one micro-batch of (id, vector) rows. Same id-monotonicity
-    * contract as [[SimilarityIngest.applyBatch]]: replaying the committed
-    * last id no-ops; an id below the ledger fails loudly (fresh
-    * checkpoint pointed at existing state). */
+  /** Gate one micro-batch of (id, vector) rows through [[BatchLedger]]'s
+    * exactly-once loop. A pre-seed is the semantic index at id -1
+    * (`putSemanticIndexBatch`). */
   def applyBatch(spark: SparkSession, stateDir: String, batch0: DataFrame,
                  batchId: Long, idCol: String, vecCol: String,
                  p: Params = Params()): Unit = {
-    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
-    val last = lastBatchId(spark, stateDir)
-    require(batchId >= last,
-      s"batch id $batchId regressed below the committed ledger ($last) at " +
-        s"$stateDir: state was built by a different checkpoint lineage. " +
-        "Use a fresh stateDir or restore the original checkpoint.")
-    if (batchId == last) return // replay of the committed batch: no-op
-    // the gate holds _gate.lock for the whole batch: a compaction
-    // starting mid-batch now fails loudly instead of racing the probes
-    // (and a batch starting mid-fold still fails on _compact.lock).
-    // Job economy (r13): AQE off for the batch's plans — measured
-    // 47 -> 13 jobs/batch (Util.withMicroBatchPlanning). BOTH sessions:
-    // under Structured Streaming batch0 is rooted at the stream's clone
-    graft.Util.withMicroBatchPlanning(Seq(spark, batch0.sparkSession)) {
-    BatchLedger.withGateLock(spark, stateDir) {
-      leafStores(stateDir).foreach(s =>
-        graft.io.Parquet.repairBatchStore(spark, s))
-      val cellsDir = s"$stateDir/semantic"
-      // a PRE-SEEDED index (putSemanticIndexBatch with id -1 over an
-      // existing corpus — the seedCorpusIndex pattern) must route batch 0
-      // through the GATE branch, or vectors duplicating the seed corpus
-      // would be silently accepted by a self-dedup-only bootstrap
-      val fs = new org.apache.hadoop.fs.Path(stateDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val seeded = fs.exists(
-        new org.apache.hadoop.fs.Path(s"$cellsDir/cells/batch=-1"))
-      val bootstrapped = last >= 0L || seeded
-      // spread the batch to the gate's configured parallelism (r18 —
-      // see SimilarityIngest: a one-partition foreachBatch frame runs
-      // the cell/double-vector pass single-task otherwise)
-      val batch = graft.Util.spreadBatch(batch0, idCol).persist()
-      val pinned = scala.collection.mutable.ListBuffer[DataFrame]()
-      def pin(df: DataFrame): DataFrame = {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pinned += df
-        df
-      }
-      try {
-        if (batch.isEmpty) return
-        // ONE (id, cell, v) pass over the batch (the SimilarityIngest
-        // fusion): the pinned frame feeds the index probe, the intra-batch
-        // self-dedup, and the index write — previously each consumer
-        // re-derived cells and double vectors from the raw batch
-        val rows = pin(Dedup.semanticFrames(batch, idCol, vecCol, p.bits))
-        val (acc, quar) =
-          if (!bootstrapped) {
-            // first batch IS the corpus: self-dedup only
-            val comps = Dedup.semanticDedupFromRows(rows, p.tau, p.bits)
-            val keep = pin(batch.join(graft.Util.batchSide(
-              comps.filter(col("id") =!= col("comp"))
-                .select(col("id").as("__graft_drop"))),
-              batch(idCol) === col("__graft_drop"), "left_anti"))
-            val q = batch.join(graft.Util.batchSide(
-                keep.select(col(idCol).as("__graft_keep"))),
-                batch(idCol) === col("__graft_keep"), "left_anti")
-              .withColumn("reason", lit("near_dup"))
-            (keep, q)
-          } else {
-            // crash replay guard: prune this batch's own half-written
-            // index rows so the probe sees exactly the pre-batch corpus.
-            // Explicit schema (r14, job economy): the store holds exactly
-            // the (id, cell, v) slice of this pinned frame plus the batch
-            // partition column — inferring it from footers cost a Spark
-            // job per micro-batch. The layout guard keeps the explicit
-            // schema honest (r14 review: a flat store would read `batch`
-            // as all-NULL and the prune would silently EMPTY the corpus).
-            graft.Util.requireBatchLayout(fs, s"$cellsDir/cells")
-            val corpusCells = spark.read
-              .schema(graft.Util.withBatchColumn(
-                rows.select(col("id"), col("cell"), col("v")).schema))
-              .parquet(s"$cellsDir/cells")
-              .filter(col("batch") =!= batchId)
-            val near = pin(Dedup.semanticNewVsIndexFromRows(rows,
-                corpusCells, p.tau)
-              .select(col("new_id").as("__graft_bad")).distinct())
-            val qIndex = batch.join(graft.Util.batchSide(near),
-                batch(idCol) === col("__graft_bad"))
-              .drop("__graft_bad")
-              .withColumn("reason", lit("near_dup"))
-            val a0 = pin(batch.join(graft.Util.batchSide(near),
-              batch(idCol) === col("__graft_bad"), "left_anti"))
-            // intra-batch self-dedup, scoped to the index-gate survivors'
-            // slice of the pinned cell frame
-            val comps = Dedup.semanticDedupFromRows(
-              rows.join(graft.Util.batchSide(
-                a0.select(col(idCol).as("id"))), Seq("id"),
-                "left_semi"), p.tau, p.bits)
-            val keep = pin(a0.join(graft.Util.batchSide(
-              comps.filter(col("id") =!= col("comp"))
-                .select(col("id").as("__graft_drop"))),
-              a0(idCol) === col("__graft_drop"), "left_anti"))
-            val qIntra = a0.join(graft.Util.batchSide(
-                keep.select(col(idCol).as("__graft_keep"))),
-                a0(idCol) === col("__graft_keep"), "left_anti")
-              .withColumn("reason", lit("near_dup"))
-            (keep, qIndex.unionByName(qIntra))
-          }
-        // commit protocol: the three store writes are mutually independent
-        // batch-keyed overwrites — run them concurrently, stamp LAST (the
-        // only barrier; any crash prefix replays to the identical state,
-        // same argument as SimilarityIngest.applyBatch)
-        graft.Util.runConcurrently(Seq(
-          () => acc.write.mode("overwrite")
-            .parquet(s"$stateDir/accepted/batch=$batchId"),
-          () => quar.write.mode("overwrite")
-            .parquet(s"$stateDir/quarantine/batch=$batchId"),
-          () => Dedup.putSemanticIndexBatchFromRows(
+    val cellsDir = s"$stateDir/semantic"
+    BatchLedger.gateBatch(spark, stateDir, batch0, batchId, idCol,
+      leafStores(stateDir), Seq(s"$cellsDir/cells")) { (g, batch) =>
+      // ONE (id, cell, v) pass over the batch: the pinned frame feeds the
+      // index probe, the intra-batch self-dedup, and the index write
+      val rows = g.pin(Dedup.semanticFrames(batch, idCol, vecCol, p.bits))
+      val (acc, quar) =
+        if (!g.bootstrapped) {
+          // first batch IS the corpus: self-dedup only
+          val comps = Dedup.semanticDedupFromRows(rows, p.tau, p.bits)
+          val keep = g.pin(batch.join(graft.Util.batchSide(
+            comps.filter(col("id") =!= col("comp"))
+              .select(col("id").as("__graft_drop"))),
+            batch(idCol) === col("__graft_drop"), "left_anti"))
+          val q = batch.join(graft.Util.batchSide(
+              keep.select(col(idCol).as("__graft_keep"))),
+              batch(idCol) === col("__graft_keep"), "left_anti")
+            .withColumn("reason", lit("near_dup"))
+          (keep, q)
+        } else {
+          // the store holds exactly the (id, cell, v) slice of `rows`
+          val corpusCells = g.prior(s"$cellsDir/cells",
+            rows.select(col("id"), col("cell"), col("v")).schema)
+          val near = g.pin(Dedup.semanticNewVsIndexFromRows(rows,
+              corpusCells, p.tau)
+            .select(col("new_id").as("__graft_bad")).distinct())
+          val qIndex = batch.join(graft.Util.batchSide(near),
+              batch(idCol) === col("__graft_bad"))
+            .drop("__graft_bad")
+            .withColumn("reason", lit("near_dup"))
+          val a0 = g.pin(batch.join(graft.Util.batchSide(near),
+            batch(idCol) === col("__graft_bad"), "left_anti"))
+          // intra-batch self-dedup, scoped to the index-gate survivors'
+          // slice of the pinned cell frame
+          val comps = Dedup.semanticDedupFromRows(
             rows.join(graft.Util.batchSide(
-              acc.select(col(idCol).as("id"))), Seq("id"),
-              "left_semi"), cellsDir, batchId, p.bits)))
-        BatchLedger.stamp(spark, stateDir, batchId)
-      } finally {
-        pinned.foreach(_.unpersist())
-        batch.unpersist()
-      }
-    }
+              a0.select(col(idCol).as("id"))), Seq("id"),
+              "left_semi"), p.tau, p.bits)
+          val keep = g.pin(a0.join(graft.Util.batchSide(
+            comps.filter(col("id") =!= col("comp"))
+              .select(col("id").as("__graft_drop"))),
+            a0(idCol) === col("__graft_drop"), "left_anti"))
+          val qIntra = a0.join(graft.Util.batchSide(
+              keep.select(col(idCol).as("__graft_keep"))),
+              a0(idCol) === col("__graft_keep"), "left_anti")
+            .withColumn("reason", lit("near_dup"))
+          (keep, qIndex.unionByName(qIntra))
+        }
+      Seq(
+        () => acc.write.mode("overwrite")
+          .parquet(s"$stateDir/accepted/batch=$batchId"),
+        () => quar.write.mode("overwrite")
+          .parquet(s"$stateDir/quarantine/batch=$batchId"),
+        () => Dedup.putSemanticIndexBatchFromRows(
+          rows.join(graft.Util.batchSide(
+            acc.select(col(idCol).as("id"))), Seq("id"),
+            "left_semi"), cellsDir, batchId, p.bits))
     }
   }
 
   /** The gate as a Structured Streaming query over a parquet directory
-    * source; caller `.start()`s it. */
+    * source ([[BatchLedger.stream]]); caller `.start()`s it. */
   def ingest(spark: SparkSession, srcDir: String, stateDir: String,
              checkpointDir: String, idCol: String, vecCol: String,
-             p: Params = Params()): DataStreamWriter[Row] = {
-    val schema = spark.read.parquet(srcDir).schema
-    spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, stateDir, b, id, idCol, vecCol, p)
-      }
-  }
+             p: Params = Params()): DataStreamWriter[Row] =
+    BatchLedger.stream(spark, srcDir, checkpointDir) { (b, id) =>
+      applyBatch(spark, stateDir, b, id, idCol, vecCol, p)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.quality.Expectations
 import graft.quality.Expectations.Expectation
-import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -40,12 +40,12 @@ object QualityStream {
       "gatedIngest needs at least one expectation — an empty suite " +
         "would pass every batch vacuously (and fails inside the gate " +
         "at the first nonempty batch, long after deploy)")
-    // explicit schema removes the deploy-ordering dependency (r13): the
+    // an explicit schema removes the deploy-ordering dependency: the
     // inference read throws on a source dir the producer has not
     // written to yet, so "start the gate, then the producer" — the
     // normal streaming bring-up — could never construct the stream
-    val srcSchema = schema.getOrElse(spark.read.parquet(srcDir).schema)
-    val gate: (Dataset[Row], Long) => Unit = (batch0, batchId) => {
+    BatchLedger.stream(spark, srcDir, checkpointDir, schema) {
+      (batch0, batchId) =>
       // one persist at entry: the gate otherwise scans the batch three
       // times (emptiness probe, expectations aggregate, routed write) —
       // ~3x redundant source I/O per micro-batch on the hot ingest path
@@ -55,9 +55,9 @@ object QualityStream {
           val report = Expectations.check(batch.toDF(), expectations)
             .withColumn("batch_id", lit(batchId))
             .persist()
-          // unpersist in ITS OWN finally (r13): a transient write
-          // failure used to leak one cached report per retry attempt
-          // for the life of the query
+          // unpersist in ITS OWN finally: a transient write failure
+          // must not leak one cached report per retry attempt for the
+          // life of the query
           try {
             val allPass =
               report.agg(min(col("pass"))).collect()(0).getBoolean(0)
@@ -69,9 +69,5 @@ object QualityStream {
         }
       } finally batch.unpersist()
     }
-    spark.readStream.schema(srcSchema).parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch(gate)
   }
 }

@@ -1460,24 +1460,18 @@ object SummaryMaintenance {
     * checkpoint + the in-dir stamp give exactly-once across restarts. */
   def maintain(spark: SparkSession, srcDir: String, summaryDir: String,
                checkpointDir: String, keyCols: Seq[String],
-               valueCol: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val schema = spark.read.parquet(srcDir).schema
-    spark.readStream.schema(schema).parquet(srcDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        applyBatch(spark, summaryDir, b, id, keyCols, valueCol)
-        // conf read PER BATCH (sessions mutate): see [[CompactEveryKey]]
-        val every = spark.conf.get(CompactEveryKey, "0").trim.toInt
-        require(every >= 0, s"$CompactEveryKey must be >= 0, got $every")
-        if (every > 0) {
-          require(spark.conf.get(BucketsKey, "0").trim.toInt > 0,
-            s"$CompactEveryKey requires bucketed commits ($BucketsKey > " +
-              "0): the plain modes rewrite their whole image every " +
-              "batch — there is nothing to compact")
-          if (id > 0 && id % every == 0) compactSummary(spark, summaryDir)
-        }
+               valueCol: String): DataStreamWriter[org.apache.spark.sql.Row] =
+    BatchLedger.stream(spark, srcDir, checkpointDir) { (b, id) =>
+      applyBatch(spark, summaryDir, b, id, keyCols, valueCol)
+      // conf read PER BATCH (sessions mutate): see [[CompactEveryKey]]
+      val every = spark.conf.get(CompactEveryKey, "0").trim.toInt
+      require(every >= 0, s"$CompactEveryKey must be >= 0, got $every")
+      if (every > 0) {
+        require(spark.conf.get(BucketsKey, "0").trim.toInt > 0,
+          s"$CompactEveryKey requires bucketed commits ($BucketsKey > " +
+            "0): the plain modes rewrite their whole image every " +
+            "batch — there is nothing to compact")
+        if (id > 0 && id % every == 0) compactSummary(spark, summaryDir)
       }
-  }
+    }
 }

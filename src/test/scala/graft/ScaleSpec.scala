@@ -209,65 +209,82 @@ class ScaleSpec extends SparkSpec {
       s"batchSide hint must suppress the broadcast:\n$plan")
   }
 
-  test("IngestDedup steady-state micro-batch stays within its job " +
-      "budget (r15, VERDICT #1)") {
-    // the third gate's job economy, measured at 10 jobs/batch
-    // (PERF.md r15) after r14's sibling refactor
-    // (shuffle-hash batch joins, explicit-schema layout-guarded index
-    // reads). This pin is the behavioral form of the batchSide plan
-    // assert: a broadcast regression on any batch-vs-batch join, or a
-    // return to footer schema inference on a stored index, adds one
-    // Spark job per occurrence per micro-batch and trips the budget —
-    // at 10k batches/day those jobs are pure driver pressure.
-    import graft.streaming.IngestDedup
-    val docs = Util.table(spark, "/root/testdata/sf0.001", "documents")
-      .select(col("doc_id"), col("text"))
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_dedup_budget").toString
-    def batch(b: Long) = docs.filter(pmod(col("doc_id"), lit(3)) === b)
-    IngestDedup.applyBatch(spark, batch(0), 0L, s"$dir/idx", s"$dir/out",
-      "doc_id", "text")
-    IngestDedup.applyBatch(spark, batch(1), 1L, s"$dir/idx", s"$dir/out",
-      "doc_id", "text")
-    // count ONLY this gate call's jobs, keyed by job group: the spec
-    // session is shared across suites, and an unrelated suite's async
-    // work (a still-draining stream tick, a late listener event) landing
-    // inside the measurement window must not fail the pin. The group
-    // propagates to the gate's concurrent-write threads (created inside
-    // the call) and to broadcast-exchange submissions (thread-locals are
-    // captured by SQLExecution), so the gate's own jobs all carry it.
-    val group = "graft_dedup_budget_pin"
-    val sites = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[String]())
-    val jl = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.exists(_.getProperty("spark.jobGroup.id") == group))
-          sites.add(p.flatMap(q => Option(q.getProperty("callSite.short")))
-            .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse("?")))
-        ()
+  // Steady-state job budgets of the three exactly-once ingest gates, one
+  // test each. The budgets are the measured steady-state job counts at
+  // sf0.001 (IngestDedup: profiled 10 + headroom 2). Each pin is the
+  // behavioral form of the batchSide plan assert: a broadcast regression
+  // on any batch-vs-batch join, a return to footer schema inference on a
+  // stored index, or a job added to the shared commit loop adds one Spark
+  // job per occurrence per micro-batch and trips the budget — at 10k
+  // batches/day those jobs are pure driver pressure.
+  private def thirdOf(table: String, idCol: String, cols: String*)(
+      b: Long): org.apache.spark.sql.DataFrame =
+    Util.table(spark, "/root/testdata/sf0.001", table)
+      .select((idCol +: cols).map(col): _*)
+      .filter(pmod(col(idCol), lit(3)) === b)
+
+  Seq[(String, Int, String => Long => Unit)](
+    ("IngestDedup steady-state micro-batch stays within its job budget " +
+        "(r15, VERDICT #1)", 12, dir => b =>
+      graft.streaming.IngestDedup.applyBatch(spark,
+        thirdOf("documents", "doc_id", "text")(b), b, s"$dir/idx",
+        s"$dir/out", "doc_id", "text")),
+    ("SimilarityIngest steady-state micro-batch stays within its job " +
+        "budget", 13, dir => b =>
+      graft.streaming.SimilarityIngest.applyBatch(spark, dir,
+        thirdOf("documents", "doc_id", "text")(b), b, "doc_id", "text")),
+    ("EmbeddingIngest steady-state micro-batch stays within its job " +
+        "budget", 9, dir => b =>
+      graft.streaming.EmbeddingIngest.applyBatch(spark, dir,
+        thirdOf("embeddings", "vec_id", "embedding")(b), b, "vec_id",
+        "embedding"))
+  ).foreach { case (name, budget, gate) =>
+    test(name) {
+      val dir = java.nio.file.Files
+        .createTempDirectory("graft_gate_budget").toString
+      gate(dir)(0L)
+      gate(dir)(1L)
+      // count ONLY this gate call's jobs, keyed by job group: the spec
+      // session is shared across suites, and an unrelated suite's async
+      // work (a still-draining stream tick, a late listener event) landing
+      // inside the measurement window must not fail the pin. The group
+      // propagates to the gate's concurrent-write threads (created inside
+      // the call) and to broadcast-exchange submissions (thread-locals are
+      // captured by SQLExecution), so the gate's own jobs all carry it.
+      val group = "graft_gate_budget_pin"
+      val sites = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[String]())
+      val jl = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          val p = Option(e.properties)
+          if (p.exists(_.getProperty("spark.jobGroup.id") == group))
+            sites.add(p.flatMap(q => Option(q.getProperty("callSite.short")))
+              .getOrElse(e.stageInfos.headOption.map(_.name).getOrElse("?")))
+          ()
+        }
       }
-    }
-    org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(jl)
-    try {
-      spark.sparkContext.setJobGroup(group, "dedup gate job-budget pin")
-      IngestDedup.applyBatch(spark, batch(2), 2L, s"$dir/idx", s"$dir/out",
-        "doc_id", "text")
       org.apache.spark.graft.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val n = sites.size()
-      assert(n <= 12,
-        s"dedup gate steady-state batch ran $n jobs " +
-          "(profiled budget 10 + headroom 2): a batch join regressed to " +
-          "broadcast or an index read regressed to schema inference. " +
-          s"Job sites: ${java.util.List.copyOf(sites)}")
-      assert(n >= 5, s"only $n jobs carried the test's job group — the " +
-        "group is no longer propagating to the gate's jobs, so this pin " +
-        "is measuring nothing")
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(jl)
+      spark.sparkContext.addSparkListener(jl)
+      try {
+        spark.sparkContext.setJobGroup(group, "gate job-budget pin")
+        gate(dir)(2L)
+        org.apache.spark.graft.ListenerBridge
+          .waitUntilEmpty(spark.sparkContext)
+        val n = sites.size()
+        info(s"steady-state batch ran $n jobs (budget $budget)")
+        assert(n <= budget,
+          s"steady-state batch ran $n jobs (budget $budget): a batch join " +
+            "regressed to broadcast, an index read regressed to schema " +
+            "inference, or the commit loop gained a job. " +
+            s"Job sites: ${java.util.List.copyOf(sites)}")
+        assert(n >= 5, s"only $n jobs carried the test's job group — the " +
+          "group is no longer propagating to the gate's jobs, so this pin " +
+          "is measuring nothing")
+      } finally {
+        spark.sparkContext.clearJobGroup()
+        spark.sparkContext.removeSparkListener(jl)
+      }
     }
   }
 

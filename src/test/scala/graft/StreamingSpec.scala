@@ -2806,34 +2806,109 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("similarity ingest: uneven batch=-1 bases after a commit do not wedge") {
-    import graft.streaming.SimilarityIngest
+    import graft.streaming.{IngestDedup, SimilarityIngest}
     val p = SimilarityIngest.Params(windowK = 4, maxDupWindowRatio = 0.5)
     val A = "alpha bravo charlie delta echo foxtrot golf hotel india juliett"
     val fresh = "one two three four five six seven eight nine ten"
-    val state = java.nio.file.Files
-      .createTempDirectory("graft_compcrash").toString
-    SimilarityIngest.applyBatch(spark, state,
-      Seq((1L, A)).toDF("doc_id", "text"), 0L, "doc_id", "text", p)
-    // compactStores folds the five stores CONCURRENTLY — a crash can leave
+    // compactStores folds a gate's stores CONCURRENTLY — a crash can leave
     // ONE store fully folded into batch=-1 while another never started.
-    // Simulate the worst asymmetry: minhash/docs folded, windows untouched
-    // (no tmp dir, so repairBatchStore has nothing to finish). The next
-    // batch must run normally — not fail the half-seed guard, which only
-    // applies BEFORE the first commit.
-    val fs = new org.apache.hadoop.fs.Path(state)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$state/minhash/docs/batch=0"),
-      new org.apache.hadoop.fs.Path(s"$state/minhash/docs/batch=-1"))
-    SimilarityIngest.applyBatch(spark, state,
-      Seq((2L, A), (3L, fresh)).toDF("doc_id", "text"), 1L,
-      "doc_id", "text", p)
-    // the folded index still gates: the dup of doc 1 quarantines
-    assert(SimilarityIngest.quarantined(spark, state)
+    // Simulate the worst asymmetry per gate: the MinHash docs table
+    // folded, the other index store untouched (no tmp dir, so
+    // repairBatchStore has nothing to finish). The next batch must run
+    // normally — not fail the half-seed guard, which only applies BEFORE
+    // the first commit.
+    val gates = Seq[(String, (String, Seq[(Long, String)], Long) => Unit,
+        String => String, String => Set[Long])](
+      ("similarity",
+        (state, docs, id) => SimilarityIngest.applyBatch(spark, state,
+          docs.toDF("doc_id", "text"), id, "doc_id", "text", p),
+        state => s"$state/minhash/docs",
+        state => SimilarityIngest.accepted(spark, state)
+          .select("doc_id").collect().map(_.getLong(0)).toSet),
+      ("dedup",
+        (state, docs, id) => IngestDedup.applyBatch(spark,
+          docs.toDF("doc_id", "text"), id, s"$state/idx", s"$state/out",
+          "doc_id", "text"),
+        state => s"$state/idx/docs",
+        state => IngestDedup.corpus(spark, s"$state/idx", s"$state/out")
+          .select("doc_id").collect().map(_.getLong(0)).toSet))
+    val states = gates.map { case (name, apply, docsDir, accepted) =>
+      val state = java.nio.file.Files
+        .createTempDirectory(s"graft_compcrash_$name").toString
+      apply(state, Seq((1L, A)), 0L)
+      val fs = new org.apache.hadoop.fs.Path(state)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      fs.rename(new org.apache.hadoop.fs.Path(s"${docsDir(state)}/batch=0"),
+        new org.apache.hadoop.fs.Path(s"${docsDir(state)}/batch=-1"))
+      apply(state, Seq((2L, A), (3L, fresh)), 1L)
+      // the folded index still gates: the dup of doc 1 is not accepted
+      assert(accepted(state) === Set(1L, 3L), name)
+      name -> state
+    }.toMap
+    assert(SimilarityIngest.quarantined(spark, states("similarity"))
       .select("doc_id", "reason").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSet ===
       Set(2L -> "near_dup"))
-    assert(SimilarityIngest.accepted(spark, state)
-      .select("doc_id").collect().map(_.getLong(0)).toSet === Set(1L, 3L))
+  }
+
+  test("ingest gates share one batch-id contract: -1 and regressed ids " +
+      "refused, committed replays and empty batches write nothing") {
+    import graft.streaming.{EmbeddingIngest, IngestDedup, SimilarityIngest}
+    def texts(ids: Seq[Long]) = ids.map(i => (i,
+      s"doc $i alpha bravo charlie delta echo foxtrot golf hotel $i"))
+      .toDF("doc_id", "text")
+    def vecs(ids: Seq[Long]) = ids.map(i => (i,
+      Seq.tabulate(8)(d => if (d == i % 8) 1f else 0f)))
+      .toDF("vec_id", "embedding")
+    // (gate, apply(state, id, ids), ledger dir of a state)
+    val gates = Seq[(String, (String, Long, Seq[Long]) => Unit,
+        String => String)](
+      ("similarity", (state, id, ids) => SimilarityIngest.applyBatch(spark,
+        state, texts(ids), id, "doc_id", "text"), identity),
+      ("embedding", (state, id, ids) => EmbeddingIngest.applyBatch(spark,
+        state, vecs(ids), id, "vec_id", "embedding"), identity),
+      ("dedup", (state, id, ids) => IngestDedup.applyBatch(spark,
+        texts(ids), id, s"$state/idx", s"$state/out", "doc_id", "text"),
+        state => s"$state/idx"))
+    import scala.jdk.CollectionConverters._
+    def files(root: String): Map[String, (Long, Long)] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Path.of(root))
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => f.toString -> (java.nio.file.Files.size(f),
+          java.nio.file.Files.getLastModifiedTime(f).toMillis)).toMap
+      finally walk.close()
+    }
+    gates.foreach { case (name, apply, ledgerOf) =>
+      val state = java.nio.file.Files
+        .createTempDirectory(s"graft_idcontract_$name").toString
+      val ledger = ledgerOf(state)
+      def last = graft.streaming.BatchLedger.last(spark, ledger)
+      apply(state, 0L, Seq(1L, 2L))
+      assert(last === 0L, name)
+      // an empty batch stamps nothing and writes no batch dir
+      apply(state, 1L, Nil)
+      assert(last === 0L, name)
+      assert(!files(state).keys.exists(_.contains("batch=1")), name)
+      apply(state, 2L, Seq(3L, 4L))
+      assert(last === 2L, name)
+      // a replay of the committed id writes no file
+      val before = files(state)
+      apply(state, 2L, Seq(5L, 6L))
+      assert(files(state) === before, name)
+      // an id below the ledger is refused, naming the state dir
+      val regressed = intercept[IllegalArgumentException] {
+        apply(state, 1L, Seq(7L))
+      }
+      assert(regressed.getMessage.contains(
+        "regressed below the committed ledger"), name)
+      assert(regressed.getMessage.contains(ledger), name)
+      // -1 is the base segment and the empty-ledger sentinel
+      val negative = intercept[IllegalArgumentException] {
+        apply(state, -1L, Seq(8L))
+      }
+      assert(negative.getMessage.contains("must be >= 0"), name)
+      assert(last === 2L, name)
+    }
   }
 
   test("similarity ingest: stitching and its sources in ONE batch — stitching quarantines") {
